@@ -28,10 +28,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages  # noqa: E402
 from image_pdf_ocr_suite_spark.analytics import dedup, similarity  # noqa: E402
 from image_pdf_ocr_suite_spark.fixtures import build_pages_df  # noqa: E402
-from image_pdf_ocr_suite_spark.session import build_session  # noqa: E402
+from image_pdf_ocr_suite_spark.session import (  # noqa: E402
+    build_session, default_cpus)
 import __spark_entry__ as entrymod  # noqa: E402
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 
 
 def _force(df):

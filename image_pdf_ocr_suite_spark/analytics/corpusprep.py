@@ -6,13 +6,13 @@ overlap), URL canonicalization + per-domain statistics, C4-style PII
 redaction, and cross-corpus line-level deduplication (the CCNet/RefinedWeb
 boilerplate-line killer).
 
-Catalyst expressions throughout, except the decontamination gram stage,
-which defaults to an Arrow unique-gram kernel (interpreted-HOF md5 is
-GC-bound in a shared JVM — see hashkernels.py; the pure-Catalyst
-spelling remains as impl="catalyst").  Every operator is replicable in
-ANSI SQL for the DuckDB oracle.  Scale notes per operator below — the
-common theme is that every shuffle key is a fixed-width digest, never
-the document text.
+Catalyst expressions throughout, except the word-gram hash stages
+(decontamination, exact-substring dedup), which run Arrow unique-gram
+kernels (interpreted-HOF md5 is GC-bound in a shared JVM — see
+hashkernels.py).  Every operator is replicable in ANSI SQL for the
+DuckDB oracle, which checks the kernels directly.  Scale notes per
+operator below — the common theme is that every shuffle key is a
+fixed-width digest, never the document text.
 """
 
 from __future__ import annotations
@@ -32,40 +32,17 @@ PHONE_RE = "\\+[0-9]{1,2}-[0-9]{3}-[0-9]{3}-[0-9]{4}"
 IPV4_RE = "\\b([0-9]{1,3}\\.){3}[0-9]{1,3}\\b"
 
 
-def _ngram_hashes_catalyst(df: DataFrame, n: int, text_col: str,
-                           id_col: str) -> DataFrame:
-    """Pure-Catalyst spelling: md5 inside a ``transform`` lambda.  Kept as
-    the SQL-mirroring reference implementation — Catalyst higher-order
-    functions evaluate INTERPRETED (not codegen), and at corpus scale the
-    per-gram md5+concat allocations make the stage GC-bound in a shared
-    JVM (measured: near-zero 8→32-core scaling on a 640k-doc corpus).
-    The Arrow kernel below is the default engine path."""
-    base = (df.select(F.col(id_col), token_array_expr(text_col).alias("__toks"))
-              .select(F.col(id_col), F.col("__toks"),
-                      F.size("__toks").alias("__n")))
-    grams = F.when(
-        F.col("__n") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.col("__n") - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("__toks"), i, n)))),
-    ).otherwise(F.array().cast("array<string>"))
-    return base.select(F.col(id_col), F.explode(grams).alias("__h"))
-
-
-def _ngram_hashes(df: DataFrame, n: int, text_col: str, id_col: str,
-                  impl: str = "arrow") -> DataFrame:
+def _ngram_hashes(df: DataFrame, n: int, text_col: str,
+                  id_col: str) -> DataFrame:
     """(id, __h) rows: md5-hex of every word ``n``-gram.
 
-    Default is an Arrow-batched kernel that hashes each DISTINCT gram of
-    the batch exactly once (factorize → md5 per unique → gather — the
-    same Zipf trick as ``dedup.simhash64``): per-process Python workers
-    sidestep the shared-JVM GC wall of the interpreted-HOF Catalyst
-    spelling, and corpora repeat grams heavily so most md5 calls vanish.
-    Both impls emit identical (id, md5hex) rows — the DuckDB oracle pins
-    the md5 definition."""
-    if impl == "catalyst":
-        return _ngram_hashes_catalyst(df, n, text_col, id_col)
-
+    An Arrow-batched kernel that hashes each DISTINCT gram of the batch
+    exactly once (factorize → md5 per unique → gather — the same Zipf
+    trick as ``dedup.simhash64``): per-process Python workers sidestep
+    the shared-JVM GC wall of md5 inside an interpreted Catalyst
+    ``transform`` lambda (measured: near-zero 8→32-core scaling on a
+    640k-doc corpus), and corpora repeat grams heavily so most md5 calls
+    vanish.  The DuckDB oracle pins the md5 definition."""
     import numpy as np
     import pandas as pd
 
@@ -98,12 +75,12 @@ def _ngram_hashes(df: DataFrame, n: int, text_col: str, id_col: str,
 
 
 def test_gram_table(test: DataFrame, n: int = 13, text_col: str = "text",
-                    id_col: str = "doc_id", impl: str = "arrow") -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """The distinct held-out gram-hash table (one ``__h`` column) —
     precompute + persist/materialize it once when probing repeatedly
     (e.g. every streaming micro-batch) instead of re-hashing the test
     set per call; feed it to ``decontaminate_ngrams(test_grams=...)``."""
-    return _ngram_hashes(test, n, text_col, id_col, impl=impl) \
+    return _ngram_hashes(test, n, text_col, id_col) \
         .select("__h").distinct()
 
 
@@ -124,16 +101,23 @@ def decontaminate_ngrams(corpus: DataFrame, test: DataFrame | None = None,
     map-only probe followed by one count aggregate on ``id``.  Set
     ``broadcast_test=False`` to fall back to a shuffle hash join when the
     held-out set is itself large.  Pass a precomputed (ideally persisted)
-    ``test_grams`` table instead of ``test`` when probing repeatedly."""
+    ``test_grams`` table instead of ``test`` when probing repeatedly.
+
+    ``impl="arrow"`` (default) joins md5 gram hashes as above;
+    ``impl="probe"`` skips corpus-side hashing and matches raw grams
+    against a broadcast set (``_decontaminate_probe``; needs ``test``).
+    Both return identical rows."""
     if (test is None) == (test_grams is None):
         raise ValueError("pass exactly one of test / test_grams")
     if impl == "probe":
         if test is None:
             raise ValueError("impl='probe' needs the raw test frame")
         return _decontaminate_probe(corpus, test, n, text_col, id_col)
-    cg = _ngram_hashes(corpus, n, text_col, id_col, impl=impl)
+    if impl != "arrow":
+        raise ValueError(f"impl must be 'arrow' or 'probe': {impl!r}")
+    cg = _ngram_hashes(corpus, n, text_col, id_col)
     tg = (test_grams if test_grams is not None
-          else test_gram_table(test, n, text_col, id_col, impl=impl))
+          else test_gram_table(test, n, text_col, id_col))
     if broadcast_test:
         tg = F.broadcast(tg)
     # distinct AFTER the probe: the only exchange on the corpus side then
@@ -432,32 +416,15 @@ def line_dedup_stats(lines: DataFrame, id_col: str = "doc_id",
 
 
 def _positional_gram_hashes(df: DataFrame, n: int, text_col: str,
-                            id_col: str, impl: str = "arrow") -> DataFrame:
+                            id_col: str) -> DataFrame:
     """``(id, pos, __h)`` rows: md5-hex of the word ``n``-gram window
     STARTING at token index ``pos`` (0-based over the shared
     single-space token contract, empties dropped).  Unlike
     ``_ngram_hashes`` the window position is kept — exact-substring
     dedup needs it to cut spans back out of the document.
 
-    Default is the same factorize→md5-per-unique→gather Arrow kernel
-    (repeated windows hash once per batch); ``impl="catalyst"`` keeps the
-    SQL-mirroring ``transform`` + ``posexplode`` spelling (interpreted
-    HOF — GC-bound at corpus scale, see ``_ngram_hashes_catalyst``)."""
-    if impl == "catalyst":
-        base = (df.select(F.col(id_col),
-                          token_array_expr(text_col).alias("__toks"))
-                  .select(F.col(id_col), F.col("__toks"),
-                          F.size("__toks").alias("__n")))
-        grams = F.when(
-            F.col("__n") >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.col("__n") - (n - 1)),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice(F.col("__toks"), i, n)))),
-        ).otherwise(F.array().cast("array<string>"))
-        return base.select(F.col(id_col),
-                           F.posexplode(grams).alias("pos", "__h"))
-
+    The same factorize→md5-per-unique→gather Arrow kernel (repeated
+    windows hash once per batch)."""
     import numpy as np
     import pandas as pd
 
@@ -491,8 +458,7 @@ def _positional_gram_hashes(df: DataFrame, n: int, text_col: str,
 
 
 def duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    impl: str = "arrow") -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Exact-substring duplication spans (the fixed-window distributed
     approximation of suffix-array training-data dedup, Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"): every
@@ -518,7 +484,7 @@ def duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
     # without pinning, the tokenize+hash kernel executes twice.  Lazy
     # localCheckpoint (ContextCleaner-reclaimed, the round-5p rule)
     # materializes it once; rows are (id, pos, 16-byte digest) only.
-    occ = _positional_gram_hashes(df, n, text_col, id_col, impl=impl) \
+    occ = _positional_gram_hashes(df, n, text_col, id_col) \
         .localCheckpoint(eager=False)
     stats = (occ.groupBy("__h")
                 .agg(F.count(F.lit(1)).alias("__c"),
@@ -546,8 +512,7 @@ def duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
 
 
 def cut_duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        impl: str = "arrow") -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """Remove every duplicated span found by :func:`duplicate_spans`
     from the document body, keeping the corpus-wide keeper copy intact.
     Returns ``(id, clean_text, n_tokens, n_removed)`` — ``clean_text``
@@ -566,7 +531,7 @@ def cut_duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
     import numpy as np
     import pandas as pd
 
-    spans = duplicate_spans(df, n, text_col, id_col, impl=impl)
+    spans = duplicate_spans(df, n, text_col, id_col)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans"))
     # null text tokenizes to [] (not null) so every document emits a row
@@ -607,14 +572,14 @@ def cut_duplicate_spans(df: DataFrame, n: int = 20, text_col: str = "text",
 
 def bloom_decontaminate(corpus: DataFrame, test: DataFrame | None = None,
                         n: int = 13, m_bits: int = 1 << 18, k: int = 4,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        impl: str = "arrow", probe_impl: str = "arrow", *,
+                        text_col: str = "text", id_col: str = "doc_id", *,
                         test_grams: DataFrame | None = None) -> DataFrame:
     """``decontaminate_ngrams`` through a Bloom filter: the held-out gram
     set is folded into a <= ``m_bits/32``-row mergeable bit table
-    (sketches.bloom_build) and the corpus probes it with ``k`` broadcast
-    map-side joins — ``(id, n_maybe)`` counts the DISTINCT grams that
-    MAY be contaminated.
+    (sketches.bloom_build) and the corpus gram kernel tests each gram's
+    ``k`` positions against that bounded bit array, map-side —
+    ``(id, n_maybe)`` counts the DISTINCT grams that MAY be
+    contaminated.
 
     One-sided by construction: ``n_maybe >= n_shared`` per document (no
     contaminated gram is ever missed; false positives at the classic
@@ -629,29 +594,22 @@ def bloom_decontaminate(corpus: DataFrame, test: DataFrame | None = None,
     if (test is None) == (test_grams is None):
         raise ValueError("pass exactly one of test / test_grams")
     tg = (test_grams if test_grams is not None
-          else test_gram_table(test, n, text_col, id_col, impl=impl))
+          else test_gram_table(test, n, text_col, id_col))
     bloom = sketches.bloom_build(tg, "__h", m_bits=m_bits, k=k, hashed=True)
-    if impl == "arrow" and probe_impl == "arrow":
-        # fused fast path: gram hashing AND the bloom test in ONE Python
-        # stage — only the flagged (id, gram) sliver ever re-enters the
-        # JVM (a separate probe stage costs a second Arrow round trip of
-        # the full gram stream; measured no better than the join form)
-        flagged = _bloom_flagged_grams_arrow(
-            corpus, sketches.bloom_bits_array(bloom, m_bits), n, m_bits,
-            k, text_col, id_col)
-    else:
-        cg = _ngram_hashes(corpus, n, text_col, id_col, impl=impl)
-        flagged = sketches.bloom_maybe_contains(
-            cg, bloom, "__h", m_bits=m_bits, k=k, hashed=True,
-            impl=probe_impl).where(F.col("maybe"))
+    # gram hashing AND the bloom test in ONE Python stage — only the
+    # flagged (id, gram) sliver ever re-enters the JVM (a separate probe
+    # stage costs a second Arrow round trip of the full gram stream;
+    # measured no better than the k-broadcast-join form)
+    flagged = _bloom_flagged_grams(
+        corpus, sketches.bloom_bits_array(bloom, m_bits), n, m_bits,
+        k, text_col, id_col)
     return (flagged.select(F.col(id_col), F.col("__h")).distinct()
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_maybe")))
 
 
-def _bloom_flagged_grams_arrow(corpus: DataFrame, bits, n: int,
-                               m_bits: int, k: int, text_col: str,
-                               id_col: str) -> DataFrame:
+def _bloom_flagged_grams(corpus: DataFrame, bits, n: int, m_bits: int,
+                         k: int, text_col: str, id_col: str) -> DataFrame:
     """(id, __h) rows of MAYBE-contaminated grams only: the
     _ngram_hashes kernel with the bounded bit array tested against each
     DISTINCT gram's md5 before anything is emitted."""

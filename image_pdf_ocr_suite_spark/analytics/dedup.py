@@ -5,9 +5,9 @@ SimHash, and n-gram Jaccard.  Every operator has a DuckDB-replicable
 definition — the MinHash uses lexicographic MIN over fixed-width md5 hex
 digests, which is order-isomorphic to numeric min over the 128-bit hash,
 so both engines agree bit-for-bit.  The SimHash and MinHash signature
-stages default to Arrow unique-token/shingle kernels (interpreted-HOF
-md5 is GC-bound in a shared JVM — see hashkernels.py); the MinHash keeps
-its pure-Catalyst spelling as ``impl="catalyst"``.
+stages are Arrow unique-token/shingle kernels (interpreted-HOF md5 is
+GC-bound in a shared JVM — see hashkernels.py); the DuckDB oracle checks
+those kernels directly.
 
 Scale notes (100 TB design point):
 - exact dedup is a single hash-aggregate shuffle on the digest — the digest
@@ -52,14 +52,21 @@ def shingles_expr(text_col: str, k: int = 3):
     return shingles_from_tokens(F.split(F.col(text_col), " "), k)
 
 
-def _minhash_signature_arrow(df: DataFrame, text_col: str, id_col: str,
-                             n_hashes: int, shingle_k: int) -> DataFrame:
-    """Arrow kernel twin of the Catalyst signature: hashes each DISTINCT
-    shingle of the batch once per band (factorize → md5 → per-doc min) —
-    the interpreted-HOF ``aggregate`` spelling evaluates ~4 md5+concat
-    allocations per shingle inside the JVM interpreter and hits the
-    shared-JVM GC wall at corpus scale (same finding as the
-    decontamination gram stage, corpusprep._ngram_hashes)."""
+def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
+                      n_hashes: int = 4, shingle_k: int = 3) -> DataFrame:
+    """(id, band, minhash) — minhash_i = MIN(md5(shingle || '#' || i)).
+    Lexicographic min over fixed-width hex == numeric min over the hash.
+    Shingles are ``shingle_k`` tokens of the RAW single-space split
+    (empty tokens kept, the ``shingles_expr`` contract); docs with fewer
+    tokens, empty or null text emit no rows; duplicate id rows each
+    emit their own signature.
+
+    An Arrow kernel hashes each DISTINCT shingle of the batch once per
+    band (factorize → md5 → per-doc min) — a Catalyst ``aggregate`` over
+    the shingle array evaluates ~4 md5+concat allocations per shingle
+    inside the JVM interpreter and hits the shared-JVM GC wall at corpus
+    scale (same finding as the decontamination gram stage,
+    corpusprep._ngram_hashes)."""
     import hashlib
 
     import numpy as np
@@ -107,48 +114,6 @@ def _minhash_signature_arrow(df: DataFrame, text_col: str, id_col: str,
 
     return fan_out_small(df.select(id_col, text_col)).mapInPandas(
         kernel, schema=f"{id_col} {id_type}, band int, minhash string")
-
-
-def minhash_signature(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n_hashes: int = 4, shingle_k: int = 3,
-                      impl: str = "arrow") -> DataFrame:
-    """(id, band, minhash) — minhash_i = MIN(md5(shingle || '#' || i)).
-    Lexicographic min over fixed-width hex == numeric min over the hash.
-    Default impl is the Arrow unique-shingle kernel (identical output;
-    see _minhash_signature_arrow); ``impl="catalyst"`` keeps the pure
-    Catalyst single-traversal ``aggregate`` spelling that mirrors the
-    SQL oracle."""
-    if impl == "arrow":
-        return _minhash_signature_arrow(df, text_col, id_col,
-                                        n_hashes, shingle_k)
-    # materialize the token array as a projection attribute so the shingle
-    # lambda reads it instead of re-splitting the text per element
-    # (CollapseProject keeps the projections separate: split() is non-cheap
-    # and referenced many times)
-    toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__toks"))
-    sh = shingles_from_tokens(F.col("__toks"), shingle_k)
-
-    # Single traversal of the shingle array computing ALL band minima at
-    # once (aggregate with an array accumulator) — avoids re-evaluating the
-    # shingle expression per band.  Sentinel "g" sorts after every md5 hex
-    # digest; it survives only for empty shingle sets → NULL minhash.
-    # NB: lambdas must take exactly the declared args — PySpark treats an
-    # extra lambda parameter as the array index.
-    sentinel = "g"
-    init = F.array(*[F.lit(sentinel) for _ in range(n_hashes)])
-
-    def step(acc, s):
-        return F.array(*[
-            F.least(acc[i], F.md5(F.concat(s, F.lit(f"#{i}"))))
-            for i in range(n_hashes)])
-
-    sig = toks.select(F.col(id_col), F.aggregate(sh, init, step).alias("sig"))
-    cols = [F.when(F.col("sig")[i] != sentinel, F.col("sig")[i]).alias(f"mh{i}")
-            for i in range(n_hashes)]
-    wide = sig.select(F.col(id_col), *cols)
-    stack = ", ".join(f"{i}, mh{i}" for i in range(n_hashes))
-    return wide.selectExpr(id_col, f"stack({n_hashes}, {stack}) as (band, minhash)") \
-               .where(F.col("minhash").isNotNull())
 
 
 def lsh_buckets(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -344,70 +309,18 @@ _last_edge_counts: list[int] = []
 
 
 class ComponentsNotConverged(RuntimeError):
-    """connected_components_min exhausted max_iters with labels still
+    """A components solver exhausted max_iters with labels still
     moving — returning them silently would violate the 'one representative
     per component' contract (a non-minimal label is indistinguishable from
     a correct one downstream)."""
 
 
-def connected_components_min(pairs: DataFrame, id_a: str = "id_a",
-                             id_b: str = "id_b", max_iters: int = 20) -> DataFrame:
-    """(id, comp) for every id appearing in ``pairs``; comp = smallest id
-    reachable through the pair graph.
-
-    Min-label propagation with pointer jumping (path halving).  Fine for
-    the SHALLOW graphs near-dup candidates actually form (diameter 2-4:
-    converges in 2-3 rounds, matched round-for-round by the tests), but
-    NOT the scale path: on a label-shuffled 1024-node chain the jumps
-    stop compounding (measured: ``changed`` trickles at 1 for 20+
-    rounds), and long iterated localCheckpoint loops degrade
-    superlinearly past ~18 rounds in a shared local JVM (round cost
-    0.4 s → 3.4 s between rounds 17 and 21 on CONSTANT-size data —
-    see CLAUDE.md round-4 rules).  Use
-    :func:`connected_components_star` for unbounded/pathological
-    graphs; it is output-identical (pytest-pinned) and converges in
-    <= ~log2(n) cheap rounds on the same chain.  Raises
-    ComponentsNotConverged if max_iters exhausts with labels still
-    moving — an unconverged label set is silently wrong."""
-    global _last_rounds
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    sym = edges.union(edges.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    labels = (sym.select(F.col("src").alias("id")).distinct()
-              .select("id", F.col("id").alias("comp"))
-              .localCheckpoint())
-    for rnd in range(max_iters):
-        nbr = (sym.join(labels, sym["src"] == labels["id"])
-               .select(F.col("dst").alias("id"), F.col("comp")))
-        stepped = (labels.unionByName(nbr)
-                   .groupBy("id").agg(F.min("comp").alias("comp"))
-                   .localCheckpoint())  # materialize BEFORE the self-join
-        # pointer jumping (path halving): follow comp -> comp(comp) so long
-        # chains collapse in O(log diameter) rounds instead of O(diameter)
-        new_labels = (stepped.alias("a")
-                      .join(stepped.alias("b"),
-                            F.col("a.comp") == F.col("b.id"), "left")
-                      .select(F.col("a.id"),
-                              F.coalesce(F.col("b.comp"), F.col("a.comp"))
-                              .alias("comp"))
-                      .localCheckpoint())
-        changed = (new_labels.alias("n").join(labels.alias("o"), "id")
-                   .where(F.col("n.comp") != F.col("o.comp")).limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            _last_rounds = rnd + 1        # diagnostics for round-count tests
-            return labels
-    raise ComponentsNotConverged(
-        f"label propagation still changing after {max_iters} rounds; "
-        f"raise max_iters (pointer jumping needs ~log2(graph diameter) rounds)")
-
-
 def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
                               id_b: str = "id_b",
                               max_iters: int = 30) -> DataFrame:
-    """(id, comp) with comp = smallest id reachable — same contract and
-    same output as :func:`connected_components_min` (equivalence
-    pytest-pinned), via alternating large-star / small-star rounds
+    """(id, comp) for every id appearing in ``pairs``; comp = smallest id
+    reachable through the pair graph (pytest-pinned against a union-find
+    reference), via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     ACM SoCC 2014 — public algorithm).
 
@@ -422,8 +335,8 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     collapsing edge set.  Convergence is O(log^2 n) rounds worst-case,
     few in practice: measured (test_dedup_components.py), a
     label-shuffled 1024-node path graph converges in 9 rounds where
-    connected_components_min still trickles after 30, and shallow
-    near-dup graphs converge in 2-3.  Staying under ~10 rounds also
+    min-label propagation with pointer jumping still trickled after 30,
+    and shallow near-dup graphs converge in 2-3.  Staying under ~10 rounds also
     matters operationally: iterated localCheckpoint loops degrade
     superlinearly past ~18 rounds in a shared local JVM (measured,
     CLAUDE.md round-4 rules).  Raises ComponentsNotConverged when

@@ -41,8 +41,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from image_pdf_ocr_suite_spark.analytics.sketches import (HASH_BITS,
-                                                          hash48_expr)
+from image_pdf_ocr_suite_spark.analytics.sketches import HASH_BITS
 
 
 def _check_p(p: int) -> None:
@@ -73,8 +72,7 @@ def linear_counting_table(m: int) -> list[int]:
 
 
 def hll_registers(df: DataFrame, col: str, p: int = 10,
-                  group_cols: Sequence[str] = (),
-                  impl: str = "arrow") -> DataFrame:
+                  group_cols: Sequence[str] = ()) -> DataFrame:
     """Per-group HLL register table ``(group..., bucket int, r int)`` —
     only buckets that saw at least one value appear (absent = r 0).
 
@@ -82,36 +80,22 @@ def hll_registers(df: DataFrame, col: str, p: int = 10,
     most ``m`` rows per group per task ever move — never the value
     stream.
 
-    ``impl="arrow"`` (default): a partition-level kernel dedups each
-    batch's DISTINCT (group, value) pairs and hashes each once
-    (hashlib md5 — the round-3 unique-gram rule for md5-heavy stages),
-    emits per-batch (group, bucket, max rho) partials, and the same MAX
-    aggregate merges them.  On the sf0.1 trigram stream the win is
+    A partition-level kernel hashes each DISTINCT value of its
+    partition once (hashlib md5 — the round-3 unique-gram rule for
+    md5-heavy stages), emits per-partition (group, bucket, max rho)
+    partials, and a MAX aggregate merges them.  On the sf0.1
+    trigram stream the win over an all-JVM ``hash48_expr`` spelling is
     modest (3.5 → 2.9 s warm — the gram explode dominates that wall,
     not the hashing), but the partial rows entering the merge drop from
-    one-per-occurrence to ≤m per group per batch, which is the shape
-    that matters when the value stream is 10^12 rows.  Registers are
-    BIT-IDENTICAL to the catalyst spelling (same md5, same integer rho,
-    same max — no floats anywhere), so the oracle is unaffected;
-    equivalence is pytest-pinned.  ``impl="catalyst"`` keeps the
-    all-JVM spelling (hash48_expr + bin-length rho), the direct
-    restatement of the oracle SQL."""
+    one-per-occurrence to ≤m per group per partition, which is the
+    shape that matters when the value stream is 10^12 rows.  Registers
+    are integer-exact (same md5 prefix, same integer rho, same max — no
+    floats anywhere) and NULL group keys are kept, so the oracle SQL
+    (``hll_oracle_sql``) restates them bit-for-bit."""
     _check_p(p)
     gcols = list(group_cols)
     rem_bits = HASH_BITS - p
     max_rho = rem_bits + 1
-    if impl == "catalyst":
-        h = hash48_expr(col)
-        bucket = F.shiftright(h, rem_bits).cast("int")
-        rem = h % F.lit(1 << rem_bits).cast("bigint")
-        rho = F.when(rem == 0, F.lit(max_rho)).otherwise(
-            F.lit(max_rho) - F.length(F.bin(rem))).cast("int")
-        rows = (df.where(F.col(col).isNotNull())
-                .select(*gcols, bucket.alias("bucket"), rho.alias("rho")))
-        return (rows.groupBy(*gcols, "bucket")
-                .agg(F.max("rho").alias("r")))
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'arrow' or 'catalyst': {impl!r}")
 
     import hashlib
 
@@ -246,11 +230,10 @@ def hll_estimate(registers: DataFrame, p: int = 10,
 
 
 def hll_distinct(df: DataFrame, col: str, p: int = 10,
-                 group_cols: Sequence[str] = (),
-                 impl: str = "arrow") -> DataFrame:
+                 group_cols: Sequence[str] = ()) -> DataFrame:
     """Build + estimate in one call: ``(group..., n_zero, s_scaled,
     est_distinct)``."""
-    regs = hll_registers(df, col, p=p, group_cols=group_cols, impl=impl)
+    regs = hll_registers(df, col, p=p, group_cols=group_cols)
     return hll_estimate(regs, p=p, group_cols=group_cols)
 
 

@@ -607,7 +607,7 @@ def semantic_dedup(df: DataFrame, n_clusters: int = 16,
                    threshold: float = 0.92, vec_col: str = "embedding",
                    id_col: str = "vec_id",
                    centroids: np.ndarray | None = None, seed: int = 42,
-                   sample: int = 2048, impl: str = "arrow") -> DataFrame:
+                   sample: int = 2048) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication by clustering embeddings with the spherical-k-means
     coarse quantizer and searching for near-duplicates ONLY within each
@@ -621,18 +621,20 @@ def semantic_dedup(df: DataFrame, n_clusters: int = 16,
       cosine >= ``threshold`` (deterministic min-id representative per
       epsilon-neighborhood; the paper keeps the member farthest from the
       centroid — rank-free but order-dependent under ties — so this port
-      pins the reproducible rule instead).  Null-vector rows always keep.
+      pins the reproducible rule instead).  Null-vector rows always keep;
+      zero-norm vectors never pair (the oracle's NaN cosine orders above
+      the threshold — a measure-zero divergence documented rather than
+      papered over, absent from the gate data where every embedding has
+      positive norm).
 
-    ``impl="arrow"`` (default) runs the within-cluster search as ONE
-    repartition(cluster) + sortWithinPartitions + partition-level Arrow
-    kernel: each cluster is a contiguous id-sorted run, so the kernel
-    buffers one cluster at a time and takes a single numpy gram matmul
-    per cluster — the round-2/3 lesson applies verbatim (Catalyst
-    higher-order cosine runs INTERPRETED, ~5x wall on the pair join at
-    sf0.1; measured 7.6 s -> 1.2 s).  ``impl="catalyst"`` keeps the
-    SQL-mirroring equi-join spelling (bit-exact sequential sums) as the
-    oracle/equivalence reference — outputs are identical away from
-    exact-threshold cosine ties (pytest-pinned).
+    The within-cluster search is ONE repartition(cluster) +
+    sortWithinPartitions + partition-level Arrow kernel: each cluster is
+    a contiguous id-sorted run, so the kernel buffers one cluster at a
+    time and takes a single numpy gram matmul per cluster (the round-4
+    watermark_dedup shape — no per-group Arrow slicing).  The round-2/3
+    lesson applies verbatim: the oracle's shape in Spark — an equi-join
+    on cluster with a Catalyst higher-order cosine — runs INTERPRETED,
+    ~5x the wall at sf0.1 (measured 7.6 s -> 1.2 s).
 
     Scale shape (100 TB): the assignment is ONE map-only pass (the
     centroid matrix is a literal, same as ivf_list_expr); the pair search
@@ -643,49 +645,19 @@ def semantic_dedup(df: DataFrame, n_clusters: int = 16,
     The dup-id set is a tiny distinct id column — Spark broadcasts the
     left join back onto the corpus.  Nothing here is O(n^2) globally.
     """
+    import pandas as pd
+
     if centroids is None:
         centroids = train_ivf_centroids(df, n_clusters, vec_col, id_col,
                                         sample=sample, seed=seed)
-    # arrow path assigns via the numpy matmul kernel (the ivf_write_index
-    # precedent: argmax-dot first-max tie rule identical; bit-equality on
-    # the gate data pytest-pinned) — the Catalyst matdots aggregate runs
-    # interpreted and would dominate the wall at corpus scale
-    assign = (ivf_list_np(vec_col, centroids) if impl == "arrow"
-              else ivf_list_expr(vec_col, centroids))
+    # assignment via the numpy matmul kernel (the ivf_write_index
+    # precedent: argmax-dot first-max tie rule identical to
+    # ivf_list_expr) — the Catalyst matdots aggregate runs interpreted
+    # and would dominate the wall at corpus scale
     base = df.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("__v"),
-        assign.alias("cluster"))
-    if impl == "catalyst":
-        a, b = base.alias("a"), base.alias("b")
-        dup_ids = (a.join(b, (F.col("a.cluster") == F.col("b.cluster"))
-                         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                   .where(cosine_expr(F.col("a.__v"), F.col("b.__v"))
-                          >= F.lit(threshold))
-                   .select(F.col(f"b.{id_col}").alias(id_col))
-                   .distinct()
-                   .withColumn("__dup", F.lit(True)))
-    else:
-        dup_ids = _semantic_dup_ids_arrow(base, threshold, id_col) \
-            .withColumn("__dup", F.lit(True))
-    return (base.join(dup_ids, id_col, "left")
-            .select(F.col(id_col), F.col("cluster"),
-                    F.col("__dup").isNull().alias("keep")))
-
-
-def _semantic_dup_ids_arrow(base: DataFrame, threshold: float,
-                            id_col: str) -> DataFrame:
-    """Distinct dropped ids: one numpy gram matmul per cluster, clusters
-    walked as contiguous id-sorted runs of each repartitioned partition
-    (the round-4 watermark_dedup shape — no per-group Arrow slicing).
-
-    Zero-norm vectors never pair here; the catalyst spelling inherits
-    NaN-comparison semantics for them (Spark and DuckDB both order NaN
-    above the threshold) — a measure-zero divergence documented rather
-    than papered over, absent from the gate data where every embedding
-    has positive norm."""
-    import pandas as pd
-
+        ivf_list_np(vec_col, centroids).alias("cluster"))
     id_type = base.schema[id_col].dataType.simpleString()
     parts = (base.where(F.col("cluster").isNotNull())
              .repartition("cluster")
@@ -725,4 +697,8 @@ def _semantic_dup_ids_arrow(base: DataFrame, threshold: float,
         if out is not None:
             yield out
 
-    return parts.mapInPandas(kernel, schema=f"{id_col} {id_type}")
+    dup_ids = parts.mapInPandas(kernel, schema=f"{id_col} {id_type}") \
+        .withColumn("__dup", F.lit(True))
+    return (base.join(dup_ids, id_col, "left")
+            .select(F.col(id_col), F.col("cluster"),
+                    F.col("__dup").isNull().alias("keep")))

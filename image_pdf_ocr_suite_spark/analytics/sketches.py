@@ -333,53 +333,24 @@ def bloom_bits_array(bloom: DataFrame, m_bits: int):
 
 def bloom_maybe_contains(df: DataFrame, bloom, col: str,
                          m_bits: int = 1 << 18, k: int = 4,
-                         hashed: bool = False, out_col: str = "maybe",
-                         impl: str = "arrow") -> DataFrame:
+                         hashed: bool = False,
+                         out_col: str = "maybe") -> DataFrame:
     """Append boolean ``out_col``: true iff ALL ``k`` positions of the
     item's md5 are set in ``bloom`` (one-sided: never false for a truly
-    inserted item; false-positive rate ~(1-e^{-kn/m})^k).
+    inserted item; false-positive rate ~(1-e^{-kn/m})^k); null items
+    probe False.
 
-    ``impl="arrow"`` (default): the bounded bit array (``bloom`` may be
-    the word-table DataFrame or a ready ``bloom_bits_array`` result)
-    ships inside the probe kernel's closure — a single MAP-ONLY Python
-    stage, zero joins, the item stream never shuffles; repeated hashes
-    in a batch are factorized so each distinct md5 is position-tested
-    once (the Zipf trick from the gram kernels).  ``impl="catalyst"``
-    keeps the SQL-mirroring spelling — ``k`` chained broadcast left
-    joins of the word table — as the oracle/equivalence reference
-    (measured 2.6x the exact probe's wall at sf0.1; the kernel form
-    reclaims it)."""
+    The bounded bit array (``bloom`` may be the word-table DataFrame or
+    a ready ``bloom_bits_array`` result) ships inside the probe kernel's
+    closure — a single MAP-ONLY Python stage, zero joins, the item stream
+    never shuffles.  Each batch's hex values are factorized so each
+    DISTINCT md5 is position-tested once (the Zipf trick from the gram
+    kernels).  The SQL oracle's shape in Spark — ``k`` chained broadcast
+    joins of the word table — measured 2.6x the exact probe's wall at
+    sf0.1."""
     if not 0 < k <= 6:
         raise ValueError("bloom k must be in 1..6 (60-bit halves)")
-    if impl == "arrow":
-        return _bloom_probe_arrow(df, bloom, col, m_bits, k, hashed,
-                                  out_col)
-    hx = F.col(col) if hashed else F.md5(F.col(col))
-    h1, h2 = _bloom_halves(hx)
-    out = df
-    checks = []
-    for i in range(k):
-        pos = (h1 + F.lit(i) * h2) % F.lit(m_bits)
-        w, b = f"__w{i}", f"__b{i}"
-        side = F.broadcast(bloom.select(F.col("word_idx").alias(w),
-                                        F.col("bits").alias(b)))
-        out = out.join(side, (pos / 32).cast("int") == F.col(w), "left")
-        mask = F.call_function("shiftleft", F.lit(1).cast("long"),
-                               (pos % 32).cast("int"))
-        checks.append(F.coalesce(F.col(b).bitwiseAND(mask) != 0,
-                                 F.lit(False)))
-    cond = checks[0]
-    for c in checks[1:]:
-        cond = cond & c
-    drop = [c for i in range(k) for c in (f"__w{i}", f"__b{i}")]
-    return out.withColumn(out_col, cond).drop(*drop)
 
-
-def _bloom_probe_arrow(df: DataFrame, bloom, col: str, m_bits: int,
-                       k: int, hashed: bool, out_col: str) -> DataFrame:
-    """Map-only vectorized probe: factorize the batch's hex values, test
-    each DISTINCT md5's k positions against the in-closure bit array,
-    gather back."""
     import hashlib
 
     import numpy as np
@@ -391,8 +362,8 @@ def _bloom_probe_arrow(df: DataFrame, bloom, col: str, m_bits: int,
 
     def _fn(s):
         codes, uniq = pd.factorize(s, use_na_sentinel=True)
-        if len(uniq) == 0:
-            return pd.Series([None] * len(s), dtype="boolean")
+        if len(uniq) == 0:  # an all-null batch
+            return pd.Series([False] * len(s), dtype="boolean")
         hexes = (uniq if hashed else
                  [hashlib.md5(str(x).encode()).hexdigest() for x in uniq])
         h1, h2 = hex_halves_np(np.asarray(hexes, dtype=object))
@@ -400,8 +371,7 @@ def _bloom_probe_arrow(df: DataFrame, bloom, col: str, m_bits: int,
         for i in range(k):
             pos = (h1 + i * h2) % m_bits
             ok &= (bits[pos // 32] >> (pos % 32).astype(np.uint32)) & 1 == 1
-        # null items probe False — the same verdict the join spelling's
-        # coalesce(..., False) produces
+        # null items probe False — the oracle join's coalesce(..., False)
         out = np.where(codes >= 0, ok[np.maximum(codes, 0)], False)
         return pd.Series(out, dtype="boolean")
 

@@ -1,12 +1,17 @@
 """Text-analysis operators for training-data pipelines.
 
-All pure Catalyst expressions (whole-stage codegen; no Python), designed to
-be replicable in ANSI SQL for the DuckDB oracle:
+Catalyst expressions (whole-stage codegen; no Python) wherever the
+interpreted cost allows, all designed to be replicable in ANSI SQL for
+the DuckDB oracle:
 
 - token counting (whitespace arithmetic — identical in both engines),
 - quality scoring (length / token-length / uppercase ratios),
 - language-ID heuristic (stopword hits),
 - document fingerprinting (md5 over whitespace-normalized, lowercased text).
+
+Winnowing hashes one md5 per character position, so it runs as an Arrow
+kernel over the distinct k-grams of each batch; the oracle checks that
+kernel directly.
 """
 
 from __future__ import annotations
@@ -265,15 +270,26 @@ def stratified_sample(df: DataFrame, rates: dict[str, int],
     return df.where(bucket < pct)
 
 
-def _winnow_fingerprints_arrow(df: DataFrame, text_col: str, id_col: str,
-                               k: int, w: int) -> DataFrame:
-    """Arrow twin of the Catalyst winnowing: the whitespace normalization
-    stays a JVM codegen ``regexp_replace`` (the cross-engine ``\\x{..}``
-    class is Java/RE2 syntax, not Python), then the kernel hashes each
-    DISTINCT k-gram of the batch once and takes sliding-window minima
-    with vectorized byte-string ``np.minimum`` — one md5 per character
-    position is the heaviest interpreted-HOF stage in the family and
-    hits the shared-JVM GC wall at scale (see PLANS.md, minhash)."""
+def winnow_fingerprints(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", k: int = 8,
+                        w: int = 4) -> DataFrame:
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
+    rolling-hash scheme MOSS uses): hash every k-gram of the
+    whitespace-normalized lowercased text, slide a window of ``w`` hashes,
+    keep each window's minimum — near-identical documents share most
+    selected fingerprints even after local edits.  Output (id, fp) — the
+    distinct selected fingerprints per document; documents with fewer
+    than ``w`` k-grams keep them all.
+
+    The k-gram hash is md5 over the character substring (fixed-width hex
+    compares like the 128-bit integer, the same portability trick as the
+    MinHash), so the DuckDB oracle restates it directly.  The whitespace
+    normalization stays a JVM codegen ``regexp_replace`` (the
+    cross-engine ``\\x{..}`` class is Java/RE2 syntax, not Python); an
+    Arrow kernel then hashes each DISTINCT k-gram of the batch once and
+    takes sliding-window minima with vectorized ``np`` comparisons — one
+    interpreted md5 per character position hits the shared-JVM GC wall
+    at scale (see PLANS.md, minhash)."""
     import hashlib
 
     import numpy as np
@@ -330,52 +346,10 @@ def _winnow_fingerprints_arrow(df: DataFrame, text_col: str, id_col: str,
                 yield pd.DataFrame({id_col: out_id, "fp": out_fp})
 
     # the in-kernel set() dedups within one input row; the distinct
-    # matches the Catalyst/oracle contract GLOBALLY (duplicate id rows,
+    # matches the oracle contract GLOBALLY (duplicate id rows,
     # chunk boundaries) — it shuffles already per-row-deduped slivers
     return pre.mapInPandas(
         kernel, schema=f"{id_col} {id_type}, fp string").distinct()
-
-
-def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 8,
-                        w: int = 4, impl: str = "arrow") -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
-    rolling-hash scheme MOSS uses): hash every k-gram of the
-    whitespace-normalized lowercased text, slide a window of ``w`` hashes,
-    keep each window's minimum — near-identical documents share most
-    selected fingerprints even after local edits.
-
-    All Catalyst: the k-gram hash is md5 over ``substring`` (fixed-width
-    hex compares like the 128-bit integer, the same portability trick as
-    the MinHash), window minima via ``transform`` over a position sequence
-    + ``array_min(slice(...))``, dedup via explode+distinct.  Output
-    (id, fp) — the distinct selected fingerprints per document.
-
-    Default impl is the Arrow unique-gram kernel (identical rows;
-    ``impl="catalyst"`` keeps the pure-Catalyst SQL-mirroring spelling —
-    whose per-position interpreted md5 does not scale in a shared JVM)."""
-    if impl == "arrow":
-        return _winnow_fingerprints_arrow(df, text_col, id_col, k, w)
-    from image_pdf_ocr_suite_spark.unicode_ws import RUNS_PATTERN
-    norm = F.lower(F.regexp_replace(F.col(text_col), RUNS_PATTERN, " "))
-    base = df.select(F.col(id_col), norm.alias("__t"))
-    n_grams = F.length(F.col("__t")) - (k - 1)
-    grams = F.when(
-        n_grams >= 1,
-        F.transform(F.sequence(F.lit(1), n_grams),
-                    lambda i: F.md5(F.col("__t").substr(i, F.lit(k))))
-    ).otherwise(F.array().cast("array<string>"))
-    # materialize the hash array as an attribute so the window-min lambda
-    # reads it instead of re-hashing per window position
-    hashed = base.select(F.col(id_col), grams.alias("__h"))
-    n_windows = F.size(F.col("__h")) - (w - 1)
-    wins = F.when(
-        n_windows >= 1,
-        F.transform(F.sequence(F.lit(1), n_windows),
-                    lambda j: F.array_min(F.slice(F.col("__h"), j, w)))
-    ).otherwise(F.col("__h"))  # fewer than w k-grams: keep them all
-    return (hashed.select(F.col(id_col), F.explode(wins).alias("fp"))
-            .distinct())
 
 
 def bm25_scores(df: DataFrame, query_terms: list[str],

@@ -407,19 +407,6 @@ def _md_kernel(pages: Iterator[tuple]) -> pd.DataFrame:
         "markdown": md})
 
 
-def extract_markdown(pages_df, id_col: str = "doc_id",
-                     html_col: str = "page_html"):
-    """Markdown serialization of every page: map-only Arrow kernel."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _md_kernel(zip(pdf[id_col], pdf[html_col]))
-
-    from image_pdf_ocr_suite_spark.partitioning import fan_out_small
-
-    return fan_out_small(pages_df.select(id_col, html_col)).mapInPandas(
-        kernel, schema=_SCHEMA)
-
-
 def markdown_from_docs(docs_df):
     """The driver-checked composition: synthesize the deterministic
     structured page per document and serialize it back, FUSED in one

@@ -118,24 +118,6 @@ def extract_text(payload_bytes: bytes, cfg: ExtractConfig | None = None) -> str:
     return "\n".join(texts).strip() + "\n"
 
 
-def extract_page_records(payload_bytes: bytes, cfg: ExtractConfig | None = None) -> list[dict]:
-    """Page-level view of extract_text, for per-page parity checks:
-    (page, page_text, avg_conf, used_preprocessing)."""
-    cfg = cfg or ExtractConfig()
-    doc = spdf.decode(payload_bytes)
-    out = []
-    for index, page in enumerate(doc.pages, start=1):
-        image = backends.rasterize(page)
-        result = perform_adaptive_ocr(image, cfg)
-        out.append({
-            "page": index,
-            "page_text": backends.ocr_text(result.image_for_string, cfg.lang),
-            "avg_conf": result.average_confidence,
-            "used_preprocessing": result.used_preprocessing,
-        })
-    return out
-
-
 def extract_spans(payload_bytes: bytes, cfg: ExtractConfig | None = None) -> list[dict]:
     """Searchable-text span emission ≈ the per-word text layer of
     create_searchable_pdf (ocr.py:487-511): per page, filter the WINNING

@@ -17,6 +17,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on (its CPU affinity mask, not the machine's core count)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
 def build_session(app: str = "image-pdf-ocr-suite-spark",
                   master: str | None = None,
                   shuffle_partitions: int | None = None,
@@ -25,20 +32,18 @@ def build_session(app: str = "image-pdf-ocr-suite-spark",
     Small batches dominate JVM<->Python overhead (measured ~40% stage cost
     at 256 rows); size it so batch_rows x typical payload bytes stays well
     under executor Python memory (2048 x ~100 KB scans ~= 200 MB)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     b = (
         SparkSession.builder.appName(app)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus)))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # zstd parquet output (guide §6): markedly smaller than snappy at
         # similar read speed — the staging/snapshot writes here land on a
-        # shared spindle where bytes written are the wall (round 6;
-        # override via SPARK_GRAFT_PARQUET_CODEC)
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
+        # shared spindle where bytes written are the wall (round 6)
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

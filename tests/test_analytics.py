@@ -33,21 +33,24 @@ def test_exact_dedup(spark, docs):
     assert len(keep) == 4
 
 
-def test_minhash_arrow_matches_catalyst(spark, docs):
-    """The Arrow unique-shingle kernel and the Catalyst aggregate
-    spelling emit identical (id, band, minhash) rows — incl. raw-split
-    empty tokens (double spaces), short docs, empty and null text."""
-    from pyspark.sql import functions as F
+def test_minhash_arrow_matches_catalyst(spark, docs, rows_sha256):
+    """The Arrow unique-shingle kernel emits exactly the (id, band,
+    minhash) rows the retired pure-Catalyst ``aggregate`` spelling
+    emitted on these rows (recorded digest) — incl. raw-split empty
+    tokens (double spaces), short docs, empty and null text."""
     extra = spark.createDataFrame(
         [(100, "a  b c d"), (101, "x y"), (102, ""), (103, None),
-         (100, "a  b c d")],   # duplicate id row: both impls keep both
+         (100, "a  b c d")],   # duplicate id row: both rows kept
         "doc_id long, text string")
     d = docs.select("doc_id", "text").unionByName(extra)
-    a = sorted(map(tuple, dedup.minhash_signature(d, impl="arrow").collect()))
-    c = sorted(map(tuple, dedup.minhash_signature(d, impl="catalyst").collect()))
-    assert a == c and len(a) > 0
-    # the double-space doc shingles over the EMPTY token ("a  b" contract)
-    assert any(r[0] == 100 for r in a)
+    sig = dedup.minhash_signature(d)
+    assert rows_sha256(sig) == (
+        28, "f14d2aee74b6423e5409288ed8c99ec21e25540668bd0865f66431d43d0a77d1")
+    ids = [r[0] for r in sig.collect()]
+    # the double-space doc shingles over the EMPTY token ("a  b"
+    # contract), once per duplicate row; short / empty / null emit none
+    assert ids.count(100) == 8
+    assert not {101, 102, 103} & set(ids)
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -300,18 +303,19 @@ def test_jaccard_verify_pairs(spark, docs):
 
 
 def test_connected_components_min(spark):
+    """Every component is labeled by its minimum id."""
     # chain 1-2-3, isolated pair 5-6, self-contained triangle 8-9/9-10/8-10
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (8, 10)],
         "id_a long, id_b long")
     comp = {r["id"]: r["comp"]
-            for r in dedup.connected_components_min(pairs).collect()}
+            for r in dedup.connected_components_star(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 8: 8, 9: 8, 10: 8}
 
 
 def test_connected_components_empty(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup.connected_components_min(pairs).count() == 0
+    assert dedup.connected_components_star(pairs).count() == 0
 
 
 def test_verified_near_dup_losers(spark, docs):
@@ -453,18 +457,23 @@ def test_winnow_fingerprints_matches_reference(spark):
     assert len(inter) / len(got[0] | got[1]) > 0.5
 
 
-def test_winnow_arrow_matches_catalyst(spark):
-    """Arrow unique-gram winnowing == the Catalyst HOF spelling, incl.
-    unicode whitespace normalization (both run the SAME JVM
-    regexp_replace), short docs, and the fewer-than-w-grams branch."""
+def test_winnow_arrow_matches_catalyst(spark, rows_sha256):
+    """Arrow unique-gram winnowing emits exactly the rows the retired
+    Catalyst HOF spelling emitted here (recorded digest), incl. unicode
+    whitespace normalization (U+3000, NBSP), short docs, and the
+    fewer-than-w-grams branch."""
     from image_pdf_ocr_suite_spark.analytics import text as textops
     rows = [(0, "The quick　brown fox jumps over the lazy dog"),
             (1, "exactly9ch"), (2, "tiny"), (3, ""), (4, None),
             (5, "repeat repeat repeat repeat repeat")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, textops.winnow_fingerprints(df, impl="arrow").collect()))
-    c = sorted(map(tuple, textops.winnow_fingerprints(df, impl="catalyst").collect()))
-    assert a == c and len(a) > 0
+    fps = textops.winnow_fingerprints(df)
+    assert rows_sha256(fps) == (
+        20, "d1ff35849b4a488da42cfc4e8acfd069c960076a74a37f059d803d1bb7dc9b89")
+    ids = [r[0] for r in fps.collect()]
+    # 10 chars -> 3 k-grams < w: all three kept; shorter than k: none
+    assert ids.count(1) == 3
+    assert not {2, 3, 4} & set(ids)
 
 
 def _wav_bytes(rate=8000, n=800, channels=1, amp=0.5):
@@ -569,19 +578,6 @@ def test_sketch_impl_paths_agree(spark, neardup_emb):
     npy = {(r["id_a"], r["id_b"]) for r in similarity.embedding_near_dup_pairs(
         neardup_emb, sketch_impl="numpy", **kwargs).collect()}
     assert cat == npy and len(cat) >= 10
-
-
-def test_connected_components_raises_on_exhaustion(spark):
-    """An unconverged label set must raise, not return silently (the
-    failure direction would otherwise be invisible: extra 'components'
-    that are really one)."""
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(63)],
-                                  "id_a long, id_b long")
-    with pytest.raises(dedup.ComponentsNotConverged):
-        dedup.connected_components_min(pairs, max_iters=1)
-    # the same 64-node chain converges well inside the default budget
-    comp = dedup.connected_components_min(pairs).collect()
-    assert len(comp) == 64 and all(r["comp"] == 0 for r in comp)
 
 
 def test_ivf_train_guards_empty_and_null(spark):

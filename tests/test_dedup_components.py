@@ -1,6 +1,6 @@
 """Connected components: large-star/small-star (scale path) must agree
-with min-label pointer jumping on every graph shape, and both must
-converge in logarithmic rounds on the pathological chain."""
+with a union-find reference on every graph shape, and converge in
+logarithmic rounds on the pathological chain."""
 
 import numpy as np
 import pytest
@@ -50,7 +50,6 @@ def test_star_equals_min_on_random_graphs(spark):
         ids = sorted({x for e in edges for x in e})
         df = _pairs(spark, edges)
         expected = _ref_components(edges, ids)
-        assert _labels(dedup.connected_components_min(df)) == expected
         assert _labels(dedup.connected_components_star(df)) == expected
 
 
@@ -62,11 +61,11 @@ def test_star_handles_self_loops_and_singletons(spark):
 
 def test_chain_round_counts(spark):
     """Pathological label-shuffled 1024-node path graph: star stays
-    logarithmic (measured 9 rounds ~ log2(1024)).  min-label pointer
-    jumping does NOT — its `changed` count trickles at 1 for 30+ rounds
+    logarithmic (measured 9 rounds ~ log2(1024)).  Min-label pointer
+    jumping did NOT — its `changed` count trickled at 1 for 30+ rounds
     on this topology (measured; round cost also degrades superlinearly
     past ~18 iterated localCheckpoints in a shared local JVM), which is
-    exactly why connected_components_star is the default scale path."""
+    why connected_components_star is the scale path."""
     n = 1024
     # shuffled labels so min-id is interior, not an endpoint
     rng = np.random.RandomState(7)

@@ -14,7 +14,6 @@ import os
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages, fixtures
@@ -106,12 +105,6 @@ def test_winnow_single_shuffle(spark):
     plan = _plan(entrymod.q_winnow_fingerprints(spark, SF_DIR))
     assert plan.count("Exchange") == 1, plan
     assert plan.count("MapInPandas") == 1, plan
-    # the SQL-mirroring catalyst spelling keeps its single-shuffle,
-    # zero-Python plan
-    from image_pdf_ocr_suite_spark.analytics import text as textops
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    cplan = _plan(textops.winnow_fingerprints(docs, impl="catalyst"))
-    assert cplan.count("Exchange") == 1 and "MapInPandas" not in cplan, cplan
 
 
 def test_salted_agg_two_phase_shuffles(spark):
@@ -173,25 +166,13 @@ def test_watermark_dedup_single_key_shuffle(spark):
 
 
 def test_bloom_probe_is_broadcast_map_side(spark):
-    """The Bloom probe must resolve as k BROADCAST hash joins of the
-    bounded word table — the probed gram stream itself never shuffles
-    (the only exchanges are the post-flag distinct + final id count,
-    carrying the flagged sliver)."""
+    """The Bloom probe must stay map-side: the bounded bit array ships
+    inside the gram kernel, so the probed gram stream never joins or
+    shuffles (the only exchanges are the post-flag distinct + final id
+    count, carrying the flagged (id, gram) sliver)."""
     plan = _plan(entrymod.q_bloom_decontaminate(spark, SF_DIR))
-    # arrow default: the probe is a vectorized-Python projection — the
-    # gram stream never joins or shuffles; the only exchanges carry the
-    # flagged (id, gram) sliver
     assert "Join" not in plan, plan
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan, plan
-    # the SQL-mirroring join spelling stays broadcast-only
-    from image_pdf_ocr_suite_spark.analytics import corpusprep
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    test = docs.where(F.col("doc_id") % 97 == 0)
-    cplan = _plan(corpusprep.bloom_decontaminate(docs, test, n=5,
-                                                 probe_impl="catalyst"))
-    assert cplan.count("BroadcastHashJoin") >= 4, cplan
-    assert "SortMergeJoin" not in cplan, cplan
-    assert "CartesianProduct" not in cplan, cplan
 
 
 def test_semantic_dedup_shuffles_cluster_key_only(spark):
@@ -202,21 +183,10 @@ def test_semantic_dedup_shuffles_cluster_key_only(spark):
     plan = _plan(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
-    # arrow default: ONE cluster-keyed exchange feeding the partition-
-    # level kernel (the quadratic search never leaves a cluster)
+    # ONE cluster-keyed exchange feeding the partition-level kernel
+    # (the quadratic search never leaves a cluster)
     assert re.search(r"hashpartitioning\(cluster#\d+", plan), plan
     assert "MapInPandas" in plan, plan
-    # the SQL-mirroring catalyst spelling confines the pair search the
-    # same way: an EQUI-join keyed on the cluster column
-    from image_pdf_ocr_suite_spark.analytics import similarity
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cdf = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                    impl="catalyst")
-    fmt = cdf._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    assert re.search(r"Left keys \[1\]: \[cluster#\d+\]", fmt), fmt
-    assert "CartesianProduct" not in fmt, fmt
 
 
 def test_warc_parse_is_map_only(spark):

@@ -140,15 +140,13 @@ def test_hll_error_bound_and_register_bound(spark, grams):
     assert all(r["count"] <= 1024 for r in counts)
 
 
-def test_hll_arrow_equals_catalyst(spark, grams):
-    """The Arrow partial-register kernel and the all-JVM spelling build
-    BIT-identical register tables (same md5, same integer rho, same max
-    — no float anywhere), so the oracle pins either."""
-    a = hll.hll_registers(grams, "gram", p=10, group_cols=["lang"],
-                          impl="arrow").collect()
-    c = hll.hll_registers(grams, "gram", p=10, group_cols=["lang"],
-                          impl="catalyst").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, c))
+def test_hll_arrow_equals_catalyst(spark, grams, rows_sha256):
+    """The Arrow partial-register kernel builds the BIT-identical
+    register table the retired all-JVM spelling built (recorded digest;
+    same md5, same integer rho, same max — no float anywhere)."""
+    regs = hll.hll_registers(grams, "gram", p=10, group_cols=["lang"])
+    assert rows_sha256(regs) == (
+        4980, "a1a16e7ade6615b9917eeeaa0a20b3de93ffc5522d26596f8a2821504cd83485")
 
 
 def test_hll_merge_equals_full(spark, grams):
@@ -237,20 +235,17 @@ def test_hll_estimate_staging_survives_huge_estimates(spark):
     assert got == expected
 
 
-def test_hll_arrow_keeps_null_group(spark):
+def test_hll_arrow_keeps_null_group(spark, rows_sha256):
     """pandas groupby defaults to dropna=True — the arrow kernel must
-    keep NULL group keys like the catalyst spelling does (review fix)."""
+    keep NULL group keys as the retired catalyst spelling did (review
+    fix; recorded digest of that spelling's registers)."""
     rows = [(None, f"v{i}") for i in range(30)] + \
         [("en", f"w{i}") for i in range(20)]
     df = spark.createDataFrame(rows, "lang string, gram string")
-    a = {(r["lang"], r["bucket"]): r["r"]
-         for r in hll.hll_registers(df, "gram", p=7,
-                                    group_cols=["lang"]).collect()}
-    c = {(r["lang"], r["bucket"]): r["r"]
-         for r in hll.hll_registers(df, "gram", p=7, group_cols=["lang"],
-                                    impl="catalyst").collect()}
-    assert a == c
-    assert any(k[0] is None for k in a)
+    regs = hll.hll_registers(df, "gram", p=7, group_cols=["lang"])
+    assert rows_sha256(regs) == (
+        45, "a2af064dc925b2924446b2d4ae39a73e67a459f55b00fc9b7782eb8c6e788122")
+    assert any(r["lang"] is None for r in regs.collect())
 
 
 def test_dsir_kernel_matches_replay(docs):

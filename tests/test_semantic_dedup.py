@@ -71,22 +71,3 @@ def test_matches_numpy_reference(spark, planted_df):
     assert got == expect
 
 
-def test_arrow_impl_equals_catalyst(spark, planted_df):
-    a = similarity.semantic_dedup(planted_df, n_clusters=4, threshold=0.95,
-                                  impl="arrow").collect()
-    c = similarity.semantic_dedup(planted_df, n_clusters=4, threshold=0.95,
-                                  impl="catalyst").collect()
-    key = lambda rows: sorted((r["vec_id"], r["cluster"], r["keep"])
-                              for r in rows)
-    assert key(a) == key(c)
-
-
-def test_gate_data_arrow_equals_catalyst(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    a = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                  impl="arrow").collect()
-    c = similarity.semantic_dedup(emb, n_clusters=16, threshold=0.45,
-                                  impl="catalyst").collect()
-    key = lambda rows: sorted((r["vec_id"], r["cluster"], r["keep"])
-                              for r in rows)
-    assert key(a) == key(c)

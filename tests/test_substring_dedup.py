@@ -1,7 +1,6 @@
 """Exact-substring dedup (fixed-window suffix-array approximation):
 duplicate_spans / cut_duplicate_spans over crafted corpora with
-hand-computed expected spans, keeper semantics, window merging, and
-Arrow-vs-Catalyst impl equivalence.
+hand-computed expected spans, keeper semantics, and window merging.
 
 Reference behavior modeled: Lee et al. 2022 ("Deduplicating Training
 Data Makes Language Models Better") — remove every occurrence of a
@@ -110,13 +109,18 @@ def test_short_null_and_empty_docs_pass_through(spark):
 
 @pytest.mark.parametrize("n", [3, 7])
 def test_arrow_and_catalyst_impls_agree(spark, n):
+    """The Arrow kernels emit the rows the retired pure-Catalyst
+    spelling emitted (recorded): doc 0 keeps the shared 10-token prefix
+    and 8-token suffix, every later doc loses both."""
     rows = [(i, _words("s", 10) + " " + _words(f"u{i}", 5) + " "
              + _words("t", 8)) for i in range(6)]
     docs = _docs(spark, rows)
-    for fn in (cp.duplicate_spans, cp.cut_duplicate_spans):
-        a = sorted(map(tuple, fn(docs, n=n, impl="arrow").collect()))
-        c = sorted(map(tuple, fn(docs, n=n, impl="catalyst").collect()))
-        assert a == c, (fn.__name__, n)
+    spans = sorted(map(tuple, cp.duplicate_spans(docs, n=n).collect()))
+    assert spans == [(i, s, e, e - s) for i in range(1, 6)
+                     for s, e in ((0, 10), (15, 23))]
+    cut = sorted(map(tuple, cp.cut_duplicate_spans(docs, n=n).collect()))
+    assert cut == [(0, rows[0][1], 23, 0)] + [
+        (i, _words(f"u{i}", 5), 23, 18) for i in range(1, 6)]
 
 
 def test_positional_gram_hash_contract(spark):
