@@ -32,13 +32,11 @@ def main(cpus: int, pages_path: str) -> None:
     warm = extract_pages(pages.sample(0.08, seed=1).repartition(cpus * 2),
                          cfg, run_id="warm")
     warm.text.write.format("noop").mode("overwrite").save()
-    warm.unpersist()
 
     t0 = time.perf_counter()
     res = extract_pages(pages, cfg, run_id=f"scale-{cpus}")
     res.text.write.format("noop").mode("overwrite").save()
     sec = time.perf_counter() - t0
-    res.unpersist()
 
     print(json.dumps({"cpus": cpus, "n_docs": n_docs, "sec": round(sec, 3),
                       "docs_per_sec": round(n_docs / sec, 2)}))

@@ -100,7 +100,6 @@ def main() -> None:
     # (measured: ~1.5 s of the extraction time at 32 cpus)
     warm = extract_pages(pages_table.limit(CPUS * 16), cfg, run_id="warmup")
     _force(warm.text)
-    warm.unpersist()
 
     # headline: the production SINGLE-OUTPUT job shape (extract_job
     # --mode text): scan -> decode/explode -> adaptive OCR -> assembly ->
@@ -112,7 +111,6 @@ def main() -> None:
     def run_extract():
         res = extract_pages(pages_table, cfg, run_id="bench")
         _force(res.text)
-        res.unpersist()
     queries["ocr_extract"] = time_query(run_extract, "ocr_extract")
 
     # the production MULTI-OUTPUT shape (extract_job --mode all): ONE OCR
@@ -126,7 +124,6 @@ def main() -> None:
         # the kernel stage itself, and 2 tasks/core keeps dynamic load
         # balancing) — halves the small-file tax with zero shuffle
         res.pages.coalesce(2 * CPUS).write.mode("overwrite").parquet(staged_path)
-        res.unpersist()
 
     def run_all_staged():
         stage_pages()

@@ -69,7 +69,6 @@ def main() -> None:
         pages_table = spark.read.parquet(pages_path)
         res = extract_pages(pages_table, cfg, run_id="bx")
         _force(res.text)
-        res.unpersist()
 
     def leg_quality_classifier():
         from image_pdf_ocr_suite_spark.analytics import classifier as clf

@@ -42,13 +42,6 @@ class ExtractConfig:
     shuffle_partitions: int | None = None  # None -> leave session setting
     arrow_max_records: int = 256        # cap Arrow batch rows (payloads are MB-scale)
     salt_buckets: int = 0               # 0 -> plain xxhash64(url, page) repartition
-    # persist the decoded page rows between multiple output
-    # materializations (text + spans + metrics in one job).  Default OFF:
-    # the single-pass pipeline evaluates decode once per output, recompute
-    # is CPU that scales — a persist is shared-disk I/O that doesn't
-    # (measured).  At cluster scale, materialize the decoded stage to a
-    # staging table instead.
-    cache_decoded: bool = False
     # drop duplicate urls before extraction (§2.2 dedup op, GUI analog
     # ocr_desktop_app.py:1036-1037).  Off by default: it costs a full
     # payload shuffle, and Common-Crawl-style inputs are url-unique by

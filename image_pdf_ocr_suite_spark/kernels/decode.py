@@ -26,6 +26,9 @@ DECODED_SCHEMA = (
     "page_payload binary, error string"
 )
 
+# payload kinds that become quarantine rows (url, kind, error)
+QUARANTINE_KINDS = ("encrypted", "corrupt", "unknown")
+
 
 def _decode_one(url: str, raw: bytes) -> list[tuple]:
     kind = spdf.sniff(raw)

@@ -36,6 +36,7 @@ import pandas as pd
 from image_pdf_ocr_suite_spark import backends
 from image_pdf_ocr_suite_spark import payload as spdf
 from image_pdf_ocr_suite_spark.config import SPAN_OFF_NOT_RENDERED, ExtractConfig
+from image_pdf_ocr_suite_spark.kernels.decode import QUARANTINE_KINDS
 
 WORD_ARRAY_COLS = {
     "w_block": ("block_num", "array<int>"),
@@ -230,13 +231,14 @@ def _html_block(pdf: pd.DataFrame, pid: int) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _marker_block(pdf: pd.DataFrame, pid: int) -> pd.DataFrame:
-    """0-page document markers -> extracted text "\n" downstream
-    (ocr.py:751-754)."""
+def _passthrough_block(pdf: pd.DataFrame, pid: int, page_text) -> pd.DataFrame:
+    """Rows carried through without extraction: 0-page document markers
+    (page_text "" -> extracted text "\n" downstream, ocr.py:751-754) and
+    quarantine rows (page_text = the decode error)."""
     n = len(pdf)
-    out = {"url": pdf["url"].to_numpy(), "kind": "spdf",
+    out = {"url": pdf["url"].to_numpy(), "kind": pdf["kind"].to_numpy(),
            "page": pdf["page"].to_numpy(), "n_pages": pdf["n_pages"].to_numpy(),
-           "page_text": "", "avg_conf": 0.0, "used_preprocessing": False,
+           "page_text": page_text, "avg_conf": 0.0, "used_preprocessing": False,
            "n_valid_words": np.int64(0), "sum_valid_conf": 0.0}
     out.update(_empty_word_arrays(n))
     out["pid"] = pid
@@ -246,8 +248,8 @@ def _marker_block(pdf: pd.DataFrame, pid: int) -> pd.DataFrame:
 def make_extract_kernel(cfg: ExtractConfig):
     """Unified per-page kernel: dispatches each sub-batch by payload kind —
     spdf pages to adaptive OCR, html rows to the density stripper, 0-page
-    markers to passthrough — so ONE decode pass and ONE Python stage serve
-    the whole text output (no branch recomputation, no persist needed)."""
+    markers and quarantine rows to passthrough — so ONE decode pass and ONE
+    Python stage serve every output (no branch recomputation)."""
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
         ctx = TaskContext.get()
@@ -260,12 +262,16 @@ def make_extract_kernel(cfg: ExtractConfig):
             m_page = (pdf["kind"] == "spdf") & (pdf["page"] > 0)
             m_html = pdf["kind"] == "html"
             m_mark = (pdf["kind"] == "spdf") & (pdf["page"] == 0)
+            m_quar = pdf["kind"].isin(QUARANTINE_KINDS)
             if m_page.any():
                 parts.append(_ocr_block(pdf[m_page].reset_index(drop=True), cfg, pid))
             if m_html.any():
                 parts.append(_html_block(pdf[m_html].reset_index(drop=True), pid))
             if m_mark.any():
-                parts.append(_marker_block(pdf[m_mark].reset_index(drop=True), pid))
+                parts.append(_passthrough_block(pdf[m_mark], pid, ""))
+            if m_quar.any():
+                quar = pdf[m_quar]
+                parts.append(_passthrough_block(quar, pid, quar["error"].to_numpy()))
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
@@ -273,6 +279,7 @@ def make_extract_kernel(cfg: ExtractConfig):
 
 
 def ocr_pages(page_df, cfg: ExtractConfig):
-    """Per-page rows (any kind) -> extraction result rows."""
-    return page_df.select("url", "kind", "page", "n_pages", "page_payload") \
+    """Decoded rows (any kind) -> extraction result rows; a quarantine
+    row's ``page_text`` carries its decode error."""
+    return page_df.select("url", "kind", "page", "n_pages", "page_payload", "error") \
         .mapInPandas(make_extract_kernel(cfg), schema=OCR_SCHEMA)

@@ -9,17 +9,26 @@ Catalyst):
          (skew defuse, explicit count)        giant docs; AQE must not
                                               coalesce the CPU-bound stage
       -> unified extract kernel            -- adaptive OCR | HTML density
-                                              strip | empty markers, by kind
+                                              strip | empty markers |
+                                              quarantine passthrough, by kind
       -> assembly (one groupBy url)        -- headers + join/strip (Catalyst)
       -> spans (zip + explode + window)    -- searchable-text offsets
       -> metrics (groupBy pid)             -- lineage table
     encrypted/corrupt/unknown -> quarantine rows (never task failures)
 
+Quarantine rows ride through the kernel stage as passthrough rows whose
+``page_text`` is the decode error, so ``pages`` (the kernel rows) is a
+complete record of the decode: a job that stages it once derives text,
+spans, quarantine and metrics from the staged table without decoding
+again (jobs/extract_job.py ``--mode all``).  ``quarantine`` here stays
+decode-derived, so a caller that wants only quarantine rows never pays
+for the kernel stage.
+
 Design note: text assembly consumes ONE kernel output — no union of
 separately-computed branches, so materializing the text table evaluates the
-decode and extract kernels exactly once (measured: branch recomputation and
-a persist() of the decoded payloads were the scaling bottleneck; recompute
-is CPU that scales, persist is shared-disk I/O that doesn't).
+decode and extract kernels exactly once (measured: branch recomputation was
+the scaling bottleneck; a job with several outputs stages the kernel rows to
+a table instead of re-running them).
 
 At 100 TB the only data-sized shuffles are the page repartition and the
 per-url assembly groupBy; both key on (url[, page]) which is
@@ -35,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.config import ExtractConfig
-from image_pdf_ocr_suite_spark.kernels.decode import decode_pages
+from image_pdf_ocr_suite_spark.kernels.decode import QUARANTINE_KINDS, decode_pages
 from image_pdf_ocr_suite_spark.kernels.ocr import ocr_pages
 from image_pdf_ocr_suite_spark.relational.assemble import (
     assemble_documents,
@@ -50,12 +59,7 @@ class ExtractResult:
     spans: DataFrame       # url, page, block..word, boxes, conf, text, offsets
     metrics: DataFrame     # run_id, partition_id, counts, mean_conf, ...
     quarantine: DataFrame  # url, kind, error
-    pages: DataFrame       # per-page kernel rows (for downstream analytics)
-    _cached: DataFrame | None = None
-
-    def unpersist(self) -> None:
-        if self._cached is not None:
-            self._cached.unpersist()
+    pages: DataFrame       # per-page kernel rows, quarantine rows included
 
 
 def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
@@ -67,13 +71,6 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
         df = df.dropDuplicates(["url"])
 
     decoded = decode_pages(df)
-    cached = None
-    if cfg.cache_decoded:
-        from pyspark import StorageLevel
-        decoded = decoded.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = decoded
-
-    work = decoded.where(F.col("kind").isin("spdf", "html"))
     # Explicit partition count: the extract stage is CPU-bound per page, so
     # it must keep FULL task parallelism; an AQE-coalescible exchange would
     # merge these small-byte/high-CPU partitions down to a handful of tasks
@@ -85,22 +82,21 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
         keys = [F.xxhash64("url", "page")]
         if cfg.salt_buckets:
             keys = [F.pmod(F.xxhash64("url", "page"), F.lit(cfg.salt_buckets))]
-        work = work.repartition(n_parts, *keys)
+        work = decoded.repartition(n_parts, *keys)
     else:
-        work = work.repartition(n_parts, F.xxhash64("url"))
+        work = decoded.repartition(n_parts, F.xxhash64("url"))
 
     rows = ocr_pages(work, cfg)
 
     text = assemble_documents(rows)
     spans = emit_spans(rows.where((F.col("kind") == "spdf") & (F.col("page") > 0)), cfg)
 
-    quarantine = decoded.where(
-        F.col("kind").isin("encrypted", "corrupt", "unknown")
-    ).select("url", "kind", "error")
+    quarantine = decoded.where(F.col("kind").isin(*QUARANTINE_KINDS)) \
+        .select("url", "kind", "error")
 
     metrics = partition_metrics(
         rows.where((F.col("kind") == "spdf") & (F.col("page") > 0)),
         quarantine, run_id)
 
     return ExtractResult(text=text, spans=spans, metrics=metrics,
-                         quarantine=quarantine, pages=rows, _cached=cached)
+                         quarantine=quarantine, pages=rows)

@@ -45,8 +45,9 @@ def assemble_documents(rows: DataFrame) -> DataFrame:
 
     Per kind: spdf pages get the header/join/strip treatment
     (ocr.py:767, 780); 0-page markers become "\\n" (ocr.py:751-754); html
-    rows pass their stripped main text through unchanged."""
-    chunks = rows.select(
+    rows pass their stripped main text through unchanged; quarantine rows
+    are dropped (they are not documents)."""
+    chunks = rows.where(F.col("kind").isin("spdf", "html")).select(
         "url", "kind", "n_pages",
         F.struct(
             F.col("page"),

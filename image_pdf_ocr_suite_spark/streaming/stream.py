@@ -212,7 +212,7 @@ def start_extraction_stream(spark: SparkSession, input_dir: str,
                             available_now: bool = True):
     """Continuous extraction: input pages dir -> snapshot-committed text
     table (+ quarantine table).  Returns the StreamingQuery."""
-    cfg = cfg or ExtractConfig(cache_decoded=False)
+    cfg = cfg or ExtractConfig()
     text_table = SnapshotTable(f"{output_root}/text")
     quar_table = SnapshotTable(f"{output_root}/quarantine")
 

@@ -11,12 +11,17 @@ and appends to snapshot-committed output tables (text + spans + quarantine
 + metrics).  ``--resume`` anti-joins the committed urls of a previous run
 (idempotent restart after executor/driver loss — north_rule).
 
-``--mode all`` stages the post-kernel page rows (text-sized, no payloads)
-to a run-scoped SnapshotTable ONCE and derives text/spans/metrics from the
-staged rows: the OCR kernel executes exactly once per job instead of once
-per output materialization (recompute-vs-persist rationale: pipeline.py
-module docstring — a staging TABLE, not an in-memory persist, is the
-cluster-scale answer).
+``--mode all`` stages the post-kernel page rows (text-sized, no payloads;
+quarantine rows ride along with their decode error) to a run-scoped
+SnapshotTable ONCE and derives text, spans, quarantine and metrics from the
+staged rows: the decode and OCR kernels each execute exactly once per job,
+and every output costs one action — its own write (pipeline.py module
+docstring: a staging TABLE, not an in-memory persist, is the cluster-scale
+answer).
+
+Every output commits a snapshot, even an empty one: a committed snapshot
+under the run id is the stage-done marker that makes a same-``--run-id``
+restart a no-op.
 
 On a cluster with an Iceberg catalog, replace SnapshotTable with
 ``df.writeTo(table).append()`` — the pipeline code is unchanged.
@@ -31,6 +36,7 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages
+from image_pdf_ocr_suite_spark.kernels.decode import QUARANTINE_KINDS
 from image_pdf_ocr_suite_spark.relational.assemble import (
     assemble_documents,
     emit_spans,
@@ -57,54 +63,50 @@ def run(spark: SparkSession, input_table: str, output_root: str,
         pages = text_table.remaining_input(pages, "url")
         pages = quar_table.remaining_input(pages, "url")
 
-    def _append(table: SnapshotTable, df) -> None:
-        if not df.isEmpty():
-            table.append(df, run_id=run_id)
-
     def _append_once(table: SnapshotTable, df) -> None:
         # idempotent per-(table, run_id) commit: a crash-and-restart with
         # the same --run-id must not double-append any output
-        if any(s.run_id == run_id for s in table.snapshots()):
-            return
-        _append(table, df)
+        if not any(s.run_id == run_id for s in table.snapshots()):
+            table.append(df, run_id=run_id)
 
     res = extract_pages(pages, cfg, run_id=run_id)
     if mode == "all":
-        # OCR exactly once: stage the kernel rows, derive every output from
-        # the staged table (pure-Catalyst tail, no kernel re-execution).
+        # decode and OCR exactly once: stage the kernel rows, derive every
+        # output from the staged table (pure-Catalyst tail, no kernel
+        # re-execution).
         # Run-scoped root so a --resume append never mixes runs; the staged
         # table is an intermediate — drop _staged_pages/{run_id} after the
         # run (or via snapshot expiry) in production.
         stage = SnapshotTable(f"{output_root}/_staged_pages/{run_id}")
-        if not any(s.run_id == run_id for s in stage.snapshots()):
-            # coalesce to TWO tasks per slot: a narrow coalesce merges the
-            # kernel stage itself, so keep 2x-slots granularity — dynamic
-            # load balancing survives (2 tasks/core to steal) while the
-            # staged table avoids a 4x small-file tax, and no shuffle of
-            # the staged rows is paid (repartition would move them all)
-            stage.append(res.pages.coalesce(
-                2 * spark.sparkContext.defaultParallelism), run_id=run_id)
+        # coalesce to TWO tasks per slot: a narrow coalesce merges the
+        # kernel stage itself, so keep 2x-slots granularity — dynamic load
+        # balancing survives (2 tasks/core to steal) while the staged table
+        # avoids a 4x small-file tax, and no shuffle of the staged rows is
+        # paid (repartition would move them all)
+        _append_once(stage, res.pages.coalesce(
+            2 * spark.sparkContext.defaultParallelism))
         staged = stage.read(spark)
         spdf_rows = staged.where((F.col("kind") == "spdf") & (F.col("page") > 0))
+        quarantine = staged.where(F.col("kind").isin(*QUARANTINE_KINDS)) \
+            .select("url", "kind", F.col("page_text").alias("error"))
         _append_once(text_table, assemble_documents(staged))
         _append_once(SnapshotTable(f"{output_root}/spans"),
                      emit_spans(spdf_rows, cfg))
-        # quarantine needs only the decode kernel (no OCR)
-        _append_once(quar_table, res.quarantine)
+        _append_once(quar_table, quarantine)
         _append_once(SnapshotTable(f"{output_root}/metrics"),
-                     partition_metrics(spdf_rows, res.quarantine, run_id))
+                     partition_metrics(spdf_rows, quarantine, run_id))
         return run_id
 
     if mode == "text":
-        _append(text_table, res.text)
+        text_table.append(res.text, run_id=run_id)
     if mode == "spans":
-        _append(SnapshotTable(f"{output_root}/spans"), res.spans)
+        SnapshotTable(f"{output_root}/spans").append(res.spans, run_id=run_id)
     if mode == "pdf":
         from image_pdf_ocr_suite_spark.kernels.pdfsink import emit_searchable_pdfs
-        _append(SnapshotTable(f"{output_root}/pdf"),
-                emit_searchable_pdfs(pages, cfg))
-    _append(quar_table, res.quarantine)
-    _append(SnapshotTable(f"{output_root}/metrics"), res.metrics)
+        SnapshotTable(f"{output_root}/pdf").append(
+            emit_searchable_pdfs(pages, cfg), run_id=run_id)
+    quar_table.append(res.quarantine, run_id=run_id)
+    SnapshotTable(f"{output_root}/metrics").append(res.metrics, run_id=run_id)
     return run_id
 
 

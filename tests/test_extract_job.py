@@ -1,54 +1,82 @@
-"""extract_job --mode all must execute the OCR kernel exactly once per
-page row (staged-table derivation), and its four outputs must match the
+"""extract_job --mode all must execute the decode and OCR kernels exactly
+once per row (staged-table derivation), and its four outputs must match the
 direct pipeline results."""
 
+import pandas as pd
 import pytest
 
 from image_pdf_ocr_suite_spark import fixtures
 from image_pdf_ocr_suite_spark.config import ExtractConfig
+from image_pdf_ocr_suite_spark.kernels import decode as decode_mod
 from image_pdf_ocr_suite_spark.kernels import ocr as ocr_mod
 from image_pdf_ocr_suite_spark.pipeline import extract_pages
 from image_pdf_ocr_suite_spark.tableio.snapshot import SnapshotTable
 from jobs.extract_job import run as run_job
 
 DOC_ROWS = [(i, " ".join(f"e{i}_{j}" for j in range(12)), "ja") for i in range(20)]
+# doc ids below 10 hold no encrypted/corrupt payload (fixtures.make_payload)
+CLEAN_ROWS = DOC_ROWS[:10]
+OUTPUT_TABLES = ("text", "spans", "quarantine", "metrics")
+
+
+def _count_rows(acc, kern):
+    """Wrap an Arrow-batch kernel so ``acc`` counts every row it actually
+    receives (worker-side)."""
+    def wrapped(batches):
+        def gen():
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+        return kern(gen())
+    return wrapped
 
 
 @pytest.fixture()
 def counted_kernel(spark, monkeypatch):
-    """Wrap make_extract_kernel so an accumulator counts every page row
-    the OCR kernel actually receives (worker-side, Arrow batches)."""
+    """Count every page row the OCR kernel receives."""
     acc = spark.sparkContext.accumulator(0)
     real = ocr_mod.make_extract_kernel
-
-    def counting(cfg):
-        kern = real(cfg)
-
-        def wrapped(batches):
-            def gen():
-                for pdf in batches:
-                    acc.add(len(pdf))
-                    yield pdf
-            return kern(gen())
-        return wrapped
-
-    monkeypatch.setattr(ocr_mod, "make_extract_kernel", counting)
+    monkeypatch.setattr(ocr_mod, "make_extract_kernel",
+                        lambda cfg: _count_rows(acc, real(cfg)))
     return acc
 
 
-def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel):
+@pytest.fixture()
+def counted_decode(spark, monkeypatch):
+    """Count every input row the decode kernel receives."""
+    acc = spark.sparkContext.accumulator(0)
+    monkeypatch.setattr(decode_mod, "decode_kernel",
+                        _count_rows(acc, decode_mod.decode_kernel))
+    return acc
+
+
+def _snapshot_counts(out_root: str, run_id: str) -> dict[str, int]:
+    tables = (f"_staged_pages/{run_id}",) + OUTPUT_TABLES
+    return {t: len(SnapshotTable(f"{out_root}/{t}").snapshots()) for t in tables}
+
+
+def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel, counted_decode):
     input_dir = str(tmp_path / "in")
     out_root = str(tmp_path / "out")
     pdf = fixtures.build_pages_pdf(DOC_ROWS)
+    # one payload of each quarantine kind: ids 11/17 are encrypted/corrupt,
+    # plus an unknown format and a null payload
+    extra = pdf.iloc[:2].copy()
+    extra["url"] = ["https://example.com/odd/plain", "https://example.com/odd/null"]
+    extra["html"] = [b"plain bytes, no markup", None]
+    pdf = pd.concat([pdf, extra], ignore_index=True)
     spark.createDataFrame(pdf).write.parquet(input_dir)
 
     run_id = run_job(spark, input_dir, out_root, mode="all", run_id="job1")
     assert run_id == "job1"
+    # the decode kernel saw each input row exactly once — not once per output
+    assert counted_decode.value == len(pdf)
 
     staged = SnapshotTable(f"{out_root}/_staged_pages/job1").read(spark)
     n_staged = staged.count()
     assert n_staged > 0
-    # the kernel saw each page row exactly once — not once per output
+    # the kernel saw each page row exactly once — not once per output;
+    # quarantine rows are kernel rows too
     assert counted_kernel.value == n_staged
 
     # outputs complete and identical to the direct single-pass pipeline
@@ -62,9 +90,12 @@ def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel):
     expected_text = {(r["url"], r["extracted_text"]) for r in res.text.collect()}
     assert {(r["url"], r["extracted_text"]) for r in text.collect()} == expected_text
     assert spans.count() == res.spans.count()
-    assert {r["url"] for r in quar.collect()} == \
-        {r["url"] for r in res.quarantine.collect()}
+    cols = ("url", "kind", "error")
+    got_quar = sorted(tuple(r) for r in quar.select(*cols).collect())
+    assert got_quar == sorted(tuple(r) for r in res.quarantine.select(*cols).collect())
+    assert {k for _, k, _ in got_quar} == {"encrypted", "corrupt", "unknown"}
     assert metrics.count() > 0
+    assert {r["error_urls"] for r in metrics.collect()} == {len(got_quar)}
 
 
 def test_mode_all_restart_same_run_id_is_idempotent(spark, tmp_path):
@@ -131,3 +162,37 @@ def test_resume_skips_committed_urls(spark, tmp_path, counted_kernel):
     urls = [r["url"] for r in text.select("url").collect()]
     assert len(urls) == len(set(urls))          # no double extraction
     assert text.count() > n1                    # new docs arrived
+
+
+def test_mode_all_without_quarantine_commits_every_table(
+        spark, tmp_path, counted_kernel, counted_decode):
+    """An input with no quarantine payloads still commits all five tables
+    (the quarantine snapshot is empty): the committed snapshot is the
+    stage-done marker a same-run-id restart and --resume rely on."""
+    input_dir = str(tmp_path / "in")
+    out_root = str(tmp_path / "out")
+    spark.createDataFrame(fixtures.build_pages_pdf(CLEAN_ROWS)) \
+        .write.parquet(input_dir)
+
+    run_job(spark, input_dir, out_root, mode="all", run_id="c1")
+    counts = _snapshot_counts(out_root, "c1")
+    assert set(counts.values()) == {1}
+    assert SnapshotTable(f"{out_root}/quarantine").read(spark).count() == 0
+    n_text = SnapshotTable(f"{out_root}/text").read(spark).count()
+    assert n_text == len(CLEAN_ROWS)
+
+    # same-run-id restart: no table gains a snapshot, no kernel re-runs
+    decoded, kernel_rows = counted_decode.value, counted_kernel.value
+    run_job(spark, input_dir, out_root, mode="all", run_id="c1")
+    assert _snapshot_counts(out_root, "c1") == counts
+    # the restart builds the plan but runs no action over the input
+    assert counted_decode.value == decoded
+    assert counted_kernel.value == kernel_rows
+
+    # --resume afterwards: every url is committed, nothing is re-extracted
+    run_job(spark, input_dir, out_root, mode="all", resume=True, run_id="c2")
+    assert counted_decode.value == decoded
+    assert counted_kernel.value == kernel_rows
+    text = SnapshotTable(f"{out_root}/text").read(spark)
+    urls = [r["url"] for r in text.select("url").collect()]
+    assert len(urls) == len(set(urls)) == n_text

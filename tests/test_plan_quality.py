@@ -37,7 +37,7 @@ def test_pages_scan_is_column_pruned(spark, pages_parquet):
     """A job that extracts text must not read the text/lang/warc_ts columns;
     only (url, html) may reach the scan."""
     df = spark.read.parquet(pages_parquet)
-    res = extract_pages(df, ExtractConfig(cache_decoded=False), run_id="plan")
+    res = extract_pages(df, ExtractConfig(), run_id="plan")
     plan = _plan(res.pages)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
@@ -69,7 +69,7 @@ def test_ocr_stage_partitioning_is_explicit(spark, pages_parquet):
     """The exchange feeding the OCR kernel must hash on (url, page) with an
     explicit partition count (AQE must not coalesce the CPU-bound stage)."""
     df = spark.read.parquet(pages_parquet)
-    res = extract_pages(df, ExtractConfig(cache_decoded=False), run_id="plan")
+    res = extract_pages(df, ExtractConfig(), run_id="plan")
     plan = _plan(res.pages)
     assert re.search(r"hashpartitioning\(xxhash64\(url#\d+, page#\d+", plan), plan
 

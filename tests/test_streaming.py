@@ -27,7 +27,7 @@ def test_stream_extracts_all_docs(spark, tmp_path):
     pdf = _write_input(spark, input_dir)
 
     q = start_extraction_stream(spark, input_dir, out_root, ckpt,
-                                ExtractConfig(cache_decoded=False),
+                                ExtractConfig(),
                                 available_now=True)
     q.awaitTermination(120)
 
@@ -56,13 +56,13 @@ def test_stream_restart_is_exactly_once(spark, tmp_path):
     _write_input(spark, input_dir)
 
     q1 = start_extraction_stream(spark, input_dir, out_root, ckpt,
-                                 ExtractConfig(cache_decoded=False))
+                                 ExtractConfig())
     q1.awaitTermination(120)
     n1 = SnapshotTable(f"{out_root}/text").read(spark).count()
 
     # restart with the same checkpoint: no new data -> no new rows, no dupes
     q2 = start_extraction_stream(spark, input_dir, out_root, ckpt,
-                                 ExtractConfig(cache_decoded=False))
+                                 ExtractConfig())
     q2.awaitTermination(120)
     final = SnapshotTable(f"{out_root}/text").read(spark)
     assert final.count() == n1
@@ -83,7 +83,7 @@ def test_partial_commit_replay_fills_missing_table(spark, tmp_path):
     # single file -> the whole input is micro-batch 0
     spark.createDataFrame(pdf).coalesce(1).write.parquet(input_dir)
 
-    cfg = ExtractConfig(cache_decoded=False)
+    cfg = ExtractConfig()
     # simulate the pre-crash half-commit: text committed, quarantine not
     res = extract_pages(spark.read.parquet(input_dir), cfg,
                         run_id="stream-batch-0")
