@@ -120,10 +120,10 @@ def main() -> None:
     # it is actually paid, not inside the single-output headline.
     def stage_pages():
         res = extract_pages(pages_table, cfg, run_id="bench-staged")
-        # coalesce to TWO tasks per slot (not one: a narrow coalesce merges
-        # the kernel stage itself, and 2 tasks/core keeps dynamic load
-        # balancing) — halves the small-file tax with zero shuffle
-        res.pages.coalesce(2 * CPUS).write.mode("overwrite").parquet(staged_path)
+        # no post-kernel coalesce, as in the job: it would merge tasks but
+        # not Python runner invocations; the file count follows the
+        # kernel's input exchange (spark.sql.shuffle.partitions)
+        res.pages.write.mode("overwrite").parquet(staged_path)
 
     def run_all_staged():
         stage_pages()

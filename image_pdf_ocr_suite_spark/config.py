@@ -40,7 +40,6 @@ class ExtractConfig:
     # Spark-side scale knobs (no analog in the single-process reference).
     explode_pages: bool = True          # split giant docs into page rows before OCR
     shuffle_partitions: int | None = None  # None -> leave session setting
-    arrow_max_records: int = 256        # cap Arrow batch rows (payloads are MB-scale)
     salt_buckets: int = 0               # 0 -> plain xxhash64(url, page) repartition
     # drop duplicate urls before extraction (§2.2 dedup op, GUI analog
     # ocr_desktop_app.py:1036-1037).  Off by default: it costs a full

@@ -71,11 +71,16 @@ def extract_pages(df: DataFrame, cfg: ExtractConfig | None = None,
         df = df.dropDuplicates(["url"])
 
     decoded = decode_pages(df)
-    # Explicit partition count: the extract stage is CPU-bound per page, so
-    # it must keep FULL task parallelism; an AQE-coalescible exchange would
-    # merge these small-byte/high-CPU partitions down to a handful of tasks
-    # (bytes are a bad proxy for OCR cost).
-    n_parts = cfg.shuffle_partitions or df.sparkSession.sparkContext.defaultParallelism * 4
+    # One extract task -- one Python runner invocation -- per shuffle
+    # partition, which build_session sizes to the cores.  Each invocation
+    # pays a fixed worker setup (60-130 ms measured at 4 cores, far above
+    # the per-page kernel body), so oversubscribing the cores multiplies
+    # that cost while the (url, page) salt already balances the tasks.
+    # The count is passed explicitly: an AQE-coalescible exchange
+    # would merge these small-byte/high-CPU partitions down to a handful
+    # of tasks (bytes are a bad proxy for OCR cost).
+    n_parts = cfg.shuffle_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if cfg.explode_pages:
         # Salted url-hash partitioning (north_star): page number acts as the
         # salt, so a 2000-page scanned lecture PDF fans out over the cluster.

@@ -6,8 +6,9 @@ Settings chosen for the 100 TB design point (and harmless locally):
   salted repartition doesn't catch.
 - Arrow batch cap — payloads are MB-scale binaries; a 10k-row default Arrow
   batch would blow Python-worker memory.
-- shuffle partitions sized to the test box; a real cluster overrides via
-  spark-submit conf.
+- shuffle partitions sized to the cores; ``extract_pages`` reads this
+  setting as its kernel-stage task count.  A real cluster overrides it
+  via spark-submit conf.
 """
 
 from __future__ import annotations

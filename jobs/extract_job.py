@@ -78,13 +78,11 @@ def run(spark: SparkSession, input_table: str, output_root: str,
         # table is an intermediate — drop _staged_pages/{run_id} after the
         # run (or via snapshot expiry) in production.
         stage = SnapshotTable(f"{output_root}/_staged_pages/{run_id}")
-        # coalesce to TWO tasks per slot: a narrow coalesce merges the
-        # kernel stage itself, so keep 2x-slots granularity — dynamic load
-        # balancing survives (2 tasks/core to steal) while the staged table
-        # avoids a 4x small-file tax, and no shuffle of the staged rows is
-        # paid (repartition would move them all)
-        _append_once(stage, res.pages.coalesce(
-            2 * spark.sparkContext.defaultParallelism))
+        # staged as the kernel stage leaves it, one file per kernel task:
+        # a narrow coalesce here would merge tasks but not Python runner
+        # invocations (each parent partition still starts its own), so
+        # the kernel's input exchange (extract_pages) sets the file count
+        _append_once(stage, res.pages)
         staged = stage.read(spark)
         spdf_rows = staged.where((F.col("kind") == "spdf") & (F.col("page") > 0))
         quarantine = staged.where(F.col("kind").isin(*QUARANTINE_KINDS)) \

@@ -31,6 +31,15 @@ def _count_rows(acc, kern):
     return wrapped
 
 
+def _count_calls(acc, kern):
+    """Wrap a kernel so ``acc`` counts its calls: Spark calls it once per
+    Python runner invocation (one per partition of its stage)."""
+    def wrapped(batches):
+        acc.add(1)
+        return kern(batches)
+    return wrapped
+
+
 @pytest.fixture()
 def counted_kernel(spark, monkeypatch):
     """Count every page row the OCR kernel receives."""
@@ -38,6 +47,16 @@ def counted_kernel(spark, monkeypatch):
     real = ocr_mod.make_extract_kernel
     monkeypatch.setattr(ocr_mod, "make_extract_kernel",
                         lambda cfg: _count_rows(acc, real(cfg)))
+    return acc
+
+
+@pytest.fixture()
+def counted_invocations(spark, monkeypatch):
+    """Count the Python runner invocations of the OCR kernel."""
+    acc = spark.sparkContext.accumulator(0)
+    real = ocr_mod.make_extract_kernel
+    monkeypatch.setattr(ocr_mod, "make_extract_kernel",
+                        lambda cfg: _count_calls(acc, real(cfg)))
     return acc
 
 
@@ -55,7 +74,8 @@ def _snapshot_counts(out_root: str, run_id: str) -> dict[str, int]:
     return {t: len(SnapshotTable(f"{out_root}/{t}").snapshots()) for t in tables}
 
 
-def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel, counted_decode):
+def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel, counted_decode,
+                                counted_invocations):
     input_dir = str(tmp_path / "in")
     out_root = str(tmp_path / "out")
     pdf = fixtures.build_pages_pdf(DOC_ROWS)
@@ -78,6 +98,10 @@ def test_mode_all_runs_ocr_once(spark, tmp_path, counted_kernel, counted_decode)
     # the kernel saw each page row exactly once — not once per output;
     # quarantine rows are kernel rows too
     assert counted_kernel.value == n_staged
+    # the kernel is entered once per Python runner invocation, so at most
+    # once per shuffle partition of its input exchange
+    assert 0 < counted_invocations.value <= int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
 
     # outputs complete and identical to the direct single-pass pipeline
     text = SnapshotTable(f"{out_root}/text").read(spark)

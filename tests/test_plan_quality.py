@@ -67,11 +67,20 @@ def test_relational_tail_has_codegen(spark):
 
 def test_ocr_stage_partitioning_is_explicit(spark, pages_parquet):
     """The exchange feeding the OCR kernel must hash on (url, page) with an
-    explicit partition count (AQE must not coalesce the CPU-bound stage)."""
+    explicit partition count (AQE must not coalesce the CPU-bound stage),
+    taken from the session's shuffle partitions unless the config sets
+    one: one kernel task, so one Python runner, per partition."""
+    exchange = r"hashpartitioning\(xxhash64\(url#\d+, page#\d+, 42\), (\d+)\)"
     df = spark.read.parquet(pages_parquet)
-    res = extract_pages(df, ExtractConfig(), run_id="plan")
-    plan = _plan(res.pages)
-    assert re.search(r"hashpartitioning\(xxhash64\(url#\d+, page#\d+", plan), plan
+    plan = _plan(extract_pages(df, ExtractConfig(), run_id="plan").pages)
+    m = re.search(exchange, plan)
+    assert m, plan
+    assert int(m.group(1)) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    plan = _plan(extract_pages(df, ExtractConfig(shuffle_partitions=16),
+                               run_id="plan").pages)
+    m = re.search(exchange, plan)
+    assert m and int(m.group(1)) == 16, plan
 
 
 # refmodel/goldens mirror the reference's row-at-a-time loops by design:
