@@ -11,7 +11,15 @@ Everything is DataFrame API + Arrow-vectorized ``mapInPandas`` kernels —
 no per-row Python in the hot path, no RDDs.
 """
 
+from pyspark.core.files import SparkFiles
+
+from image_pdf_ocr_suite_spark import workerboot
 from image_pdf_ocr_suite_spark.config import ExtractConfig
 from image_pdf_ocr_suite_spark.pipeline import extract_pages
+
+# a kernel importing any package module patches its Python worker once;
+# worker reuse keeps the patch for the process's later tasks
+if SparkFiles._is_running_on_worker:
+    workerboot.install()
 
 __all__ = ["ExtractConfig", "extract_pages"]

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from image_pdf_ocr_suite_spark.analytics.bpe import word_vocab
+from image_pdf_ocr_suite_spark.analytics.lits import map_lit
 
 UNK = "[UNK]"
 SCORE_SCALE = 1_000_000_000  # pinned-integer quantization of the score
@@ -169,9 +170,7 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 8,
             # pair symbol is guaranteed present as a kind-0 row)
             sym_rows = counts.filter(F.col("kind") == 0) \
                              .select("left", "n").collect()
-            sym_map = F.create_map(
-                *[x for r in sym_rows
-                  for x in (F.lit(r["left"]), F.lit(int(r["n"])))])
+            sym_map = map_lit((r["left"], r["n"]) for r in sym_rows)
             pairs = counts.filter(F.col("kind") == 1) \
                           .select("left", "right",
                                   F.col("n").alias("pair_count"))

@@ -9,6 +9,12 @@ Settings chosen for the 100 TB design point (and harmless locally):
 - shuffle partitions sized to the cores; ``extract_pages`` reads this
   setting as its kernel-stage task count.  A real cluster overrides it
   via spark-submit conf.
+
+No setting here touches Python worker boot: each kernel task starts a
+Python runner invocation, and its fixed setup is cut by
+``workerboot.install()``, which the package import runs on a worker —
+not by a daemon module or a sitecustomize, which a ``--py-files``
+submit could not rely on.
 """
 
 from __future__ import annotations

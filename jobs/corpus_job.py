@@ -17,6 +17,13 @@
 This is the end-to-end shape a 100 TB training-data pipeline runs daily;
 every stage is one of the engine's tested operators.
 
+Lineage caveat: the job pins its extraction rows and dedup stages with
+``localCheckpoint``, which keeps the blocks on the executors that
+computed them and cuts the lineage.  On a real cluster, losing an
+executor mid-job therefore fails the job instead of recomputing the
+lost partitions, and the job must be rerun.  ROADMAP direction 8(c)
+tracks a ``pin`` helper with a recomputable mode for cluster runs.
+
     spark-submit --py-files pkg.zip jobs/corpus_job.py \
         --input-table pages.parquet --output-root /out \
         [--min-tokens 20] [--langs en,ja] [--jaccard 0.5]

@@ -7,7 +7,9 @@
 - the relational tail runs inside WholeStageCodegen;
 - no per-row Python in engine code (iterrows/itertuples lint; the
   reference model mirrors the reference's row loops on purpose and is
-  exempt).
+  exempt);
+- worker boot has one seam: only workerboot.py patches ``zipimport``,
+  with no daemon module and no sitecustomize.
 """
 
 import os
@@ -101,6 +103,39 @@ def test_no_per_row_python_in_engine():
                 if pat in src:
                     offenders.append((f, pat))
     assert not offenders, offenders
+
+
+def _engine_files():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for top in ("image_pdf_ocr_suite_spark", "jobs"):
+        for dirpath, _dirs, files in os.walk(os.path.join(repo, top)):
+            for f in files:
+                yield os.path.join(dirpath, f)
+
+
+# an assignment to (or setattr on) anything reached from ``zipimport``
+ZIPIMPORT_WRITE = re.compile(
+    r"\bzipimport(\.\w+)+\s*(=[^=]|[-+|]=)|\bsetattr\(\s*zipimport\b")
+
+
+def test_worker_boot_has_one_seam():
+    # the zipimporter patch lives in workerboot.py alone, and worker boot
+    # is never moved into a daemon module or a sitecustomize (a
+    # --py-files submit does not put the package on the daemon's path)
+    zip_writers, offenders = set(), []
+    for path in _engine_files():
+        name = os.path.basename(path)
+        if name in ("sitecustomize.py", "usercustomize.py"):
+            offenders.append(path)
+        if not name.endswith(".py"):
+            continue
+        src = open(path).read()
+        if "spark.python.daemon.module" in src:
+            offenders.append(path)
+        if ZIPIMPORT_WRITE.search(src):
+            zip_writers.add(name)
+    assert not offenders, offenders
+    assert zip_writers == {"workerboot.py"}, zip_writers
 
 
 def test_token_count_bpe_is_map_only(spark):

@@ -46,18 +46,49 @@ def test_segment_continuation_convention():
     assert wp._segment("x", []) == ["x"]
 
 
+# words whose symbols a SQL string literal must escape: quotes,
+# backslashes (incl. escape-looking sequences), ##, CJK, emoji
+HOSTILE_TEXTS = [("en", "it's it's don't a\\b a\\b \\u0041 \\u0041"),
+                 ("en", "x##y x##y 日本日本 😀😀 😀😀 it's")]
+
+
 def test_train_matches_replay(spark, docs_df):
     # driver_max_vocab=0 forces the DISTRIBUTED rounds — the equivalence
     # pin must not degenerate to replay-vs-replay under the counted
-    # driver fast path (round 6)
-    trained = wp.wordpiece_train(docs_df, n_merges=8, driver_max_vocab=0)
-    expected = wp.replay_train(_word_freq(), n_merges=8)
-    assert trained == expected
-    # the auto fast path (bounded vocab -> driver replay) must agree
-    assert wp.wordpiece_train(docs_df, n_merges=8) == expected
-    assert len(trained) == 8
-    assert all(p >= 1 and lc >= p and rc >= p
-               for _, _, p, lc, rc in trained)
+    # driver fast path (round 6); the hostile corpus runs its symbols
+    # through the per-round symbol-map literal
+    hostile = spark.createDataFrame(HOSTILE_TEXTS, "lang string, text string")
+    for df, texts in ((docs_df, TEXTS), (hostile, HOSTILE_TEXTS)):
+        trained = wp.wordpiece_train(df, n_merges=8, driver_max_vocab=0)
+        expected = wp.replay_train(
+            bpe.replay_word_freq([t for _, t in texts]), n_merges=8)
+        assert trained == expected
+        # the auto fast path (bounded vocab -> driver replay) must agree
+        assert wp.wordpiece_train(df, n_merges=8) == expected
+        assert len(trained) == 8
+        assert all(p >= 1 and lc >= p and rc >= p
+                   for _, _, p, lc, rc in trained)
+
+
+# symbols for the map literal itself, incl. the empty and blank keys
+HOSTILE_SYMBOLS = ["it's", "'", "\\", "\\'", "a\\nb", "\\u0041", "##",
+                   "##ing", "日本", "😀", "##😀", "", " "]
+
+
+def test_map_lit_matches_create_map(spark):
+    from pyspark.sql import functions as F
+
+    from image_pdf_ocr_suite_spark.analytics.lits import map_lit
+
+    items = [(s, i * 1000003) for i, s in enumerate(HOSTILE_SYMBOLS)]
+    ref = F.create_map(*[x for k, v in items for x in (F.lit(k), F.lit(v))])
+    keys = spark.createDataFrame([(k,) for k, _ in items] + [("absent",)],
+                                 "k string")
+    got = keys.select("k", F.element_at(map_lit(items), F.col("k")).alias("a"),
+                      F.element_at(ref, F.col("k")).alias("b")).collect()
+    assert all(r["a"] == r["b"] for r in got), got
+    assert spark.range(1).select(map_lit(items).alias("m")).first()["m"] \
+        == dict(items)
 
 
 def test_objective_is_likelihood_not_count():
