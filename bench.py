@@ -104,6 +104,7 @@ def main() -> None:
     # headline: the production SINGLE-OUTPUT job shape (extract_job
     # --mode text): scan -> decode/explode -> adaptive OCR -> assembly ->
     # sink, no staging write (a one-output job has nothing to stage).
+    from image_pdf_ocr_suite_spark.pipeline import spdf_rows
     from image_pdf_ocr_suite_spark.relational.assemble import (
         assemble_documents, emit_spans)
     staged_path = f"/tmp/bench_staged_{sf_tag}"
@@ -129,8 +130,7 @@ def main() -> None:
         stage_pages()
         staged = spark.read.parquet(staged_path)
         _force(assemble_documents(staged))
-        _force(emit_spans(
-            staged.where((F.col("kind") == "spdf") & (F.col("page") > 0)), cfg))
+        _force(emit_spans(spdf_rows(staged), cfg))
     queries["ocr_all_staged"] = time_query(run_all_staged, "ocr_all_staged")
 
     def run_spans():
@@ -139,8 +139,7 @@ def main() -> None:
         if not os.path.isdir(staged_path):
             stage_pages()
         staged = spark.read.parquet(staged_path)
-        _force(emit_spans(
-            staged.where((F.col("kind") == "spdf") & (F.col("page") > 0)), cfg))
+        _force(emit_spans(spdf_rows(staged), cfg))
     queries["ocr_spans"] = time_query(run_spans, "ocr_spans")
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

@@ -17,11 +17,21 @@ SnapshotTable ONCE and derives text, spans, quarantine and metrics from the
 staged rows: the decode and OCR kernels each execute exactly once per job,
 and every output costs one action — its own write (pipeline.py module
 docstring: a staging TABLE, not an in-memory persist, is the cluster-scale
-answer).
+answer).  ``extract_pages`` plans only the kernel rows, so no output plan is
+built twice.
+
+After the staged commit, the four derived outputs are planned and written
+concurrently, one driver thread per output.  Each is a small Catalyst job
+whose wall is mostly fixed driver and scheduling cost, so run back to back
+they left the cores idle.  The threads inherit the caller's job group and
+local properties; the scheduler stays FIFO.  The job waits for every thread
+and then re-raises the first error, in output order.
 
 Every output commits a snapshot, even an empty one: a committed snapshot
 under the run id is the stage-done marker that makes a same-``--run-id``
-restart a no-op.
+restart a no-op.  The derived outputs commit in no fixed order, so a crash
+can leave any subset of them committed; a same-``--run-id`` restart
+finishes the missing ones from the staged table without decoding or OCR.
 
 On a cluster with an Iceberg catalog, replace SnapshotTable with
 ``df.writeTo(table).append()`` — the pipeline code is unchanged.
@@ -32,11 +42,13 @@ from __future__ import annotations
 import argparse
 import sys
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages
-from image_pdf_ocr_suite_spark.kernels.decode import QUARANTINE_KINDS
+from image_pdf_ocr_suite_spark.pipeline import quarantine_rows, spdf_rows
 from image_pdf_ocr_suite_spark.relational.assemble import (
     assemble_documents,
     emit_spans,
@@ -84,15 +96,28 @@ def run(spark: SparkSession, input_table: str, output_root: str,
         # the kernel's input exchange (extract_pages) sets the file count
         _append_once(stage, res.pages)
         staged = stage.read(spark)
-        spdf_rows = staged.where((F.col("kind") == "spdf") & (F.col("page") > 0))
-        quarantine = staged.where(F.col("kind").isin(*QUARANTINE_KINDS)) \
-            .select("url", "kind", F.col("page_text").alias("error"))
-        _append_once(text_table, assemble_documents(staged))
-        _append_once(SnapshotTable(f"{output_root}/spans"),
-                     emit_spans(spdf_rows, cfg))
-        _append_once(quar_table, quarantine)
-        _append_once(SnapshotTable(f"{output_root}/metrics"),
-                     partition_metrics(spdf_rows, quarantine, run_id))
+        tail = [
+            (text_table, lambda: assemble_documents(staged)),
+            (SnapshotTable(f"{output_root}/spans"),
+             lambda: emit_spans(spdf_rows(staged), cfg)),
+            (quar_table, lambda: quarantine_rows(staged, "page_text")),
+            (SnapshotTable(f"{output_root}/metrics"),
+             lambda: partition_metrics(spdf_rows(staged),
+                                       quarantine_rows(staged, "page_text"),
+                                       run_id)),
+        ]
+
+        def commit(table, build):
+            _append_once(table, build())
+
+        # one thread per output; each target is wrapped on its own so that
+        # every thread gets its own copy of the caller's local properties
+        with ThreadPoolExecutor(len(tail)) as pool:
+            futures = [pool.submit(inheritable_thread_target(spark)(commit),
+                                   table, build)
+                       for table, build in tail]
+        for f in futures:
+            f.result()
         return run_id
 
     if mode == "text":

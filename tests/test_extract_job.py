@@ -1,22 +1,36 @@
 """extract_job --mode all must execute the decode and OCR kernels exactly
 once per row (staged-table derivation), and its four outputs must match the
-direct pipeline results."""
+direct pipeline results.  extract_pages plans only the kernel rows; the
+job's four derived outputs commit concurrently, under the caller's job
+group, and a failed one is finished by a same-run-id restart."""
+
+from collections import Counter
 
 import pandas as pd
 import pytest
 
 from image_pdf_ocr_suite_spark import fixtures
+from image_pdf_ocr_suite_spark import pipeline
 from image_pdf_ocr_suite_spark.config import ExtractConfig
 from image_pdf_ocr_suite_spark.kernels import decode as decode_mod
 from image_pdf_ocr_suite_spark.kernels import ocr as ocr_mod
 from image_pdf_ocr_suite_spark.pipeline import extract_pages
 from image_pdf_ocr_suite_spark.tableio.snapshot import SnapshotTable
+from jobs import extract_job
 from jobs.extract_job import run as run_job
+from perfbench.inputs import SF0001_DIR
 
 DOC_ROWS = [(i, " ".join(f"e{i}_{j}" for j in range(12)), "ja") for i in range(20)]
 # doc ids below 10 hold no encrypted/corrupt payload (fixtures.make_payload)
 CLEAN_ROWS = DOC_ROWS[:10]
 OUTPUT_TABLES = ("text", "spans", "quarantine", "metrics")
+# rows_sha256 of the sf0.001 spans and metrics (run_id dropped) under the
+# test session (local[4], 8 shuffle partitions), recorded from the eager
+# ExtractResult that built all four outputs inside extract_pages
+SF0001_SPANS = (18171,
+                "802f7cc695924e7370883bd8c6df86d3aae0fa277eab90361a3a1fe2fa17c1bc")
+SF0001_METRICS = (8,
+                  "233705e5c31716ff035f39661bcc31768a755e30fbce58f21efddf637cb007ee")
 
 
 def _count_rows(acc, kern):
@@ -220,3 +234,103 @@ def test_mode_all_without_quarantine_commits_every_table(
     text = SnapshotTable(f"{out_root}/text").read(spark)
     urls = [r["url"] for r in text.select("url").collect()]
     assert len(urls) == len(set(urls)) == n_text
+
+
+def _write_input(spark, tmp_path, rows=DOC_ROWS) -> str:
+    input_dir = str(tmp_path / "in")
+    spark.createDataFrame(fixtures.build_pages_pdf(rows)).write.parquet(input_dir)
+    return input_dir
+
+
+@pytest.fixture()
+def counted_builds(monkeypatch):
+    """Count the driver-side plan builds of the derived outputs in
+    pipeline.py (the ExtractResult properties)."""
+    calls = Counter()
+    for name in ("assemble_documents", "emit_spans", "partition_metrics",
+                 "quarantine_rows"):
+        real = getattr(pipeline, name)
+
+        def counted(*a, _name=name, _real=real, **k):
+            calls[_name] += 1
+            return _real(*a, **k)
+        monkeypatch.setattr(pipeline, name, counted)
+    return calls
+
+
+def test_extract_pages_builds_outputs_lazily(spark, tmp_path, counted_builds,
+                                            rows_sha256):
+    res = extract_pages(fixtures.build_pages_df(spark, SF0001_DIR), ExtractConfig(),
+                        run_id="lazy")
+    assert not counted_builds
+    # each output is planned once, on first read; metrics reuses quarantine
+    for attr in ("text", "spans", "quarantine", "metrics"):
+        assert getattr(res, attr) is getattr(res, attr)
+    assert counted_builds == {"assemble_documents": 1, "emit_spans": 1,
+                              "partition_metrics": 1, "quarantine_rows": 1}
+    assert rows_sha256(res.spans) == SF0001_SPANS
+    assert rows_sha256(res.metrics.drop("run_id")) == SF0001_METRICS
+
+    # --mode all derives its outputs from the staged table and reads none
+    # of the ExtractResult outputs
+    counted_builds.clear()
+    input_dir = _write_input(spark, tmp_path, CLEAN_ROWS)
+    run_job(spark, input_dir, str(tmp_path / "out"), mode="all", run_id="lz")
+    assert not counted_builds
+
+
+def test_mode_all_tail_failure_is_finished_by_restart(
+        spark, tmp_path, monkeypatch, counted_kernel, counted_decode,
+        rows_sha256):
+    """A failing output does not stop the others from committing; the job
+    raises its error, and a same-run-id restart commits only the missing
+    table, from the staged rows, with the rows of a clean run."""
+    input_dir = _write_input(spark, tmp_path)
+    out_root = str(tmp_path / "out")
+
+    class SpansFailed(RuntimeError):
+        pass
+
+    def fail(*_a, **_k):
+        raise SpansFailed("spans")
+
+    real = extract_job.emit_spans
+    monkeypatch.setattr(extract_job, "emit_spans", fail)
+    with pytest.raises(SpansFailed):
+        run_job(spark, input_dir, out_root, mode="all", run_id="f1")
+    counts = _snapshot_counts(out_root, "f1")
+    assert counts == {"_staged_pages/f1": 1, "text": 1, "spans": 0,
+                      "quarantine": 1, "metrics": 1}
+
+    monkeypatch.setattr(extract_job, "emit_spans", real)
+    decoded, kernel_rows = counted_decode.value, counted_kernel.value
+    run_job(spark, input_dir, out_root, mode="all", run_id="f1")
+    assert _snapshot_counts(out_root, "f1") == {**counts, "spans": 1}
+    assert counted_decode.value == decoded
+    assert counted_kernel.value == kernel_rows
+
+    clean_root = str(tmp_path / "clean")
+    run_job(spark, input_dir, clean_root, mode="all", run_id="f2")
+    got = rows_sha256(SnapshotTable(f"{out_root}/spans").read(spark))
+    assert got[0] > 0
+    assert got == rows_sha256(SnapshotTable(f"{clean_root}/spans").read(spark))
+
+
+def test_mode_all_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every job the run submits, the concurrent tail's included, carries
+    the job group the caller set."""
+    input_dir = _write_input(spark, tmp_path, CLEAN_ROWS)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "extract_job --mode all")
+    try:
+        run_job(spark, input_dir, str(tmp_path / "out"), mode="all",
+                run_id="jg")
+    finally:
+        sc._jsc.clearJobGroup()
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # at least one job per commit: the staged rows and the four outputs
+    assert len(tracker.getJobIdsForGroup("g")) >= 5

@@ -9,9 +9,12 @@
   reference model mirrors the reference's row loops on purpose and is
   exempt);
 - worker boot has one seam: only workerboot.py patches ``zipimport``,
-  with no daemon module and no sitecustomize.
+  with no daemon module and no sitecustomize;
+- driver threads inherit the caller's local properties (job group,
+  description) and the scheduler stays FIFO: no pool, no allocation file.
 """
 
+import ast
 import os
 import re
 
@@ -136,6 +139,79 @@ def test_worker_boot_has_one_seam():
             zip_writers.add(name)
     assert not offenders, offenders
     assert zip_writers == {"workerboot.py"}, zip_writers
+
+
+# scheduler settings no engine file may set: concurrent writes share the
+# default FIFO scheduler, with no pool to configure or keep in sync
+SCHEDULER_KEYS = ("spark.scheduler.mode", "spark.scheduler.pool",
+                  "spark.scheduler.allocation.file")
+
+
+def _callee(func) -> str | None:
+    return func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+
+
+def _inherits(node) -> bool:
+    # inheritable_thread_target(f) or inheritable_thread_target(spark)(f)
+    while isinstance(node, ast.Call):
+        if _callee(node.func) == "inheritable_thread_target":
+            return True
+        node = node.func
+    return False
+
+
+def _unwrapped_thread_targets(src: str) -> list[int]:
+    """Lines that hand a thread a target not wrapped in
+    ``inheritable_thread_target``: ``Thread(target=...)`` and the
+    callable of ``submit``/``map`` on a ``ThreadPoolExecutor``."""
+    tree = ast.parse(src)
+
+    def is_executor(node):
+        return isinstance(node, ast.Call) and _callee(node.func) == "ThreadPoolExecutor"
+
+    pools = {item.optional_vars.id for node in ast.walk(tree)
+             if isinstance(node, ast.With) for item in node.items
+             if is_executor(item.context_expr)
+             and isinstance(item.optional_vars, ast.Name)}
+    pools |= {t.id for node in ast.walk(tree)
+              if isinstance(node, ast.Assign) and is_executor(node.value)
+              for t in node.targets if isinstance(t, ast.Name)}
+    bad = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        if _callee(node.func) == "Thread":
+            target = next((k.value for k in node.keywords if k.arg == "target"),
+                          node.args[1] if len(node.args) > 1 else None)
+        elif (_callee(node.func) in ("submit", "map")
+              and isinstance(node.func, ast.Attribute)
+              and (is_executor(node.func.value)
+                   or (isinstance(node.func.value, ast.Name)
+                       and node.func.value.id in pools))):
+            target = node.args[0] if node.args else None
+        else:
+            continue
+        if not _inherits(target):
+            bad.append(node.lineno)
+    return sorted(bad)
+
+
+def test_driver_threads_inherit_local_properties():
+    assert _unwrapped_thread_targets(
+        "with ThreadPoolExecutor(2) as p:\n    p.submit(f, 1)\n"
+        "threading.Thread(target=f).start()\n") == [2, 3]
+    assert _unwrapped_thread_targets(
+        "with ThreadPoolExecutor(2) as p:\n"
+        "    p.submit(inheritable_thread_target(spark)(f), 1)\n"
+        "Thread(target=inheritable_thread_target(f)).start()\n") == []
+    offenders = []
+    for path in _engine_files():
+        if not path.endswith(".py"):
+            continue
+        src = open(path).read()
+        offenders += [(path, key) for key in SCHEDULER_KEYS if key in src]
+        offenders += [(path, line) for line in _unwrapped_thread_targets(src)]
+    assert not offenders, offenders
 
 
 def test_token_count_bpe_is_map_only(spark):
