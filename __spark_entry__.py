@@ -379,11 +379,10 @@ def q_embedding_near_dup(spark, sf_dir):
     identically).  16 planes / 4 bands here purely to bound the generated
     oracle SQL; the library default is 64/8."""
     emb = _t(spark, sf_dir, "embeddings")
-    # sketch_impl pinned: the DuckDB oracle replicates the bit-exact
-    # sequential-sum sketch — never let the size heuristic pick numpy here
+    # 16 planes × dim 64 fits similarity.CATALYST_HOF_BUDGET: the bit-exact
+    # sketch the DuckDB oracle replicates (pinned in test_plan_quality.py)
     return similarity.embedding_near_dup_pairs(
-        emb, threshold=0.3, n_planes=16, n_bands=4, dim=64,
-        sketch_impl="catalyst") \
+        emb, threshold=0.3, n_planes=16, n_bands=4, dim=64) \
         .select("id_a", "id_b")
 
 

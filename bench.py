@@ -11,8 +11,8 @@ documents/second at the bench scale factor.  Per-query wall times cover the
 other operator families (dedup, similarity, sessionize, relational).
 
 Each timed query is forced with a noop-format write (full evaluation, no
-driver collect).  Scaling runs (BENCH/run_scaling.py) execute this same
-module at two parallelism levels.
+driver collect).  The repo benchmark (perfbench/run.py, declared in
+BENCHMARK.json) times the same legs through perfbench/suite.py.
 
 Throttle defense (round 5): the sandbox host throttles unpredictably (up
 to 3× — BENCH_r04 recorded a spurious 2.8× "regression" that a quiet-host
@@ -268,8 +268,8 @@ def main() -> None:
 
     # round-5j leg: distributed stable global rank (curriculum order) —
     # one range exchange pinned by a localCheckpoint, pure-Catalyst
-    # rank projection (its N-vs-4N evidence lives in
-    # BENCH/run_rank_scaling.py against the orderBy baseline)
+    # rank projection (its N-vs-4N evidence against the orderBy
+    # baseline is recorded in BENCH/BASELINE.md)
     queries["curriculum_order"] = time_query(
         lambda: _force(entrymod.q_curriculum_order(spark, SF_DIR)),
         "curriculum_order")

@@ -41,42 +41,30 @@ from image_pdf_ocr_suite_spark.analytics.lits import double_array_lit
 
 from image_pdf_ocr_suite_spark.analytics import pq as pqmod
 from image_pdf_ocr_suite_spark.analytics.similarity import (
-    _probe_lists, cosine_expr, ivf_list_expr, ivf_list_np,
-    train_ivf_centroids)
+    _probe_lists, cosine_expr, ivf_assign, train_ivf_centroids)
 
 
 def ivfpq_write_index(df: DataFrame, path: str, n_lists: int = 16,
                       m_sub: int = 8, n_codes: int = 16,
                       vec_col: str = "embedding", id_col: str = "vec_id",
                       centroids: np.ndarray | None = None,
-                      codebooks: np.ndarray | None = None,
-                      coarse_impl: str = "auto") -> tuple[np.ndarray,
-                                                          np.ndarray]:
+                      codebooks: np.ndarray | None = None
+                      ) -> tuple[np.ndarray, np.ndarray]:
     """Materialize the IVF-PQ layout: ``(id, code, embedding)`` parquet
     partitioned by the coarse list, with ``_ivf_centroids.json`` and
     ``_pq_codebooks.json`` sidecars.  One pass: coarse assignment and PQ
     encoding run in the same projection (two kernel columns, zero extra
-    shuffles — the write's partitionBy is the only exchange).
-
-    ``coarse_impl`` follows similarity.ivf_write_index: "catalyst" =
-    bit-exact sequential dot chains (what the pinned-centroid oracle
-    replicates), "numpy" = Arrow matmul (the 100 TB build path), "auto"
-    = catalyst while n_lists*dim fits the interpreted-HOF budget."""
+    shuffles — the write's partitionBy is the only exchange).  Coarse
+    assignment goes through ``similarity.ivf_assign``."""
     if centroids is None:
         centroids = train_ivf_centroids(df, n_lists, vec_col, id_col)
     if codebooks is None:
         codebooks = pqmod.train_pq(df, m_sub, n_codes, vec_col, id_col)
-    if coarse_impl == "auto":
-        coarse_impl = ("catalyst"
-                       if centroids.shape[0] * centroids.shape[1] <= 1024
-                       else "numpy")
-    lists = (ivf_list_expr(vec_col, centroids) if coarse_impl == "catalyst"
-             else ivf_list_np(F.col(vec_col), centroids))
     out = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         pqmod.pq_codes_np(F.col(vec_col), codebooks).alias("code"),
         F.col(vec_col),
-        lists.alias("ivf_list"))
+        ivf_assign(vec_col, centroids).alias("ivf_list"))
     out.write.mode("overwrite").partitionBy("ivf_list").parquet(path)
     with open(os.path.join(path, "_ivf_centroids.json"), "w") as fh:
         json.dump([[float(x) for x in row] for row in centroids], fh)

@@ -34,46 +34,26 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from image_pdf_ocr_suite_spark.analytics.similarity import (
-    ivf_list_expr, ivf_list_np, train_ivf_centroids)
-
-
-def keep_hash_expr(id_col: str):
-    """Deterministic 48-bit keep-order hash of the id — the ONE
-    repo-wide md5 contract (`sketches.hash48_expr`; every oracle
-    restates it as `CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1,
-    12) AS BIGINT)`)."""
-    from image_pdf_ocr_suite_spark.analytics.sketches import hash48_expr
-
-    return hash48_expr(id_col)
+    ivf_assign, train_ivf_centroids)
+from image_pdf_ocr_suite_spark.analytics.sketches import hash48_expr
 
 
 def cluster_balanced_sample(df: DataFrame, quota: int, n_clusters: int = 16,
                             vec_col: str = "embedding",
                             id_col: str = "vec_id",
-                            centroids: np.ndarray | None = None,
-                            assign_impl: str = "auto") -> DataFrame:
+                            centroids: np.ndarray | None = None) -> DataFrame:
     """``(id, cluster int, rk int, kept boolean)`` for every row with a
     non-null vector: ``kept`` ⇔ the row's deterministic rank within its
-    cluster is ≤ ``quota``.
-
-    ``assign_impl`` follows the IVF convention: "catalyst" = bit-exact
-    sequential dot chains (what the pinned-centroid oracle replicates),
-    "numpy" = Arrow matmul kernel (the 100 TB path), "auto" = catalyst
-    while n_clusters·dim fits the interpreted-HOF budget."""
+    cluster is ≤ ``quota``.  Clusters are assigned by
+    ``similarity.ivf_assign``."""
     if quota < 1:
         raise ValueError(f"quota must be >= 1 (got {quota})")
     if centroids is None:
         centroids = train_ivf_centroids(df, n_clusters, vec_col, id_col)
-    if assign_impl == "auto":
-        assign_impl = ("catalyst"
-                       if centroids.shape[0] * centroids.shape[1] <= 1024
-                       else "numpy")
-    cluster = (ivf_list_expr(vec_col, centroids)
-               if assign_impl == "catalyst"
-               else ivf_list_np(F.col(vec_col), centroids))
     assigned = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), cluster.alias("cluster"),
-        keep_hash_expr(id_col).alias("__kh"))
+        F.col(id_col), ivf_assign(vec_col, centroids).alias("cluster"),
+        # keep-order: the repo-wide 48-bit md5 of the id
+        hash48_expr(id_col).alias("__kh"))
     w = Window.partitionBy("cluster").orderBy(F.asc("__kh"), F.asc(id_col))
     ranked = assigned.select(
         id_col, "cluster",

@@ -26,6 +26,14 @@ from image_pdf_ocr_suite_spark.analytics.lits import (
     double_array_lit, double_matrix_lit)
 
 
+# Catalyst higher-order functions run interpreted per array element, so
+# the one-pass ``_matdots_aggregate`` cost grows with rows × dim of the
+# matrix while the Arrow matmul's barely does.  Up to this many
+# coefficients the bit-exact Catalyst spelling runs (every oracle-checked
+# call site sits at 16 × 64 = 1024); beyond it the numpy spelling does.
+CATALYST_HOF_BUDGET = 1024
+
+
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, x: acc + x)
@@ -77,6 +85,31 @@ def _matdots_aggregate(vec_col, mat: np.ndarray, finish):
     return F.aggregate(emb, init, step, finish)
 
 
+def _matdots_np(vec_col, mat: np.ndarray, finish, return_type: str):
+    """Arrow spelling of ``_matdots_aggregate``: one numpy matmul per
+    batch gives every non-null vector's dots with all rows of ``mat``;
+    ``finish(dots)`` folds each row of dots to one integer.  Null vectors
+    stay null."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    mt = mat.T.copy()
+
+    def _fn(s):
+        vals = s.to_numpy()
+        out = np.full(len(vals), None, dtype=object)
+        idx = [i for i, v in enumerate(vals) if v is not None]
+        if idx:
+            m = np.stack([np.asarray(vals[i], dtype=np.float64)
+                          for i in idx])
+            for i, x in zip(idx, finish(m @ mt)):
+                out[i] = int(x)
+        return pd.Series(out)
+
+    _fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    return pandas_udf(_fn, return_type)(vec_col)
+
+
 def sketch_expr(vec_col, planes: np.ndarray):
     """Sign sketch as a bigint: bit j = 1 iff <v, h_j> > 0.  One-pass
     (``_matdots_aggregate``); bit 63 is the sign bit, added as the
@@ -103,39 +136,30 @@ def sketch_np(vec_col, planes: np.ndarray):
     bit-guaranteed to match the sequential-sum form at exact sign
     boundaries, so oracle-checked configs use ``sketch_expr``; recall and
     determinism are unaffected (numpy is deterministic)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    n_planes = planes.shape[0]
-    pt = planes.T.copy()
     weights = np.array([(1 << j) if j < 63 else -(1 << 63)
-                        for j in range(n_planes)], dtype=np.int64)
+                        for j in range(planes.shape[0])], dtype=np.int64)
+    return _matdots_np(vec_col, planes,
+                       lambda dots: ((dots > 0) * weights).sum(axis=1),
+                       "long")
 
-    def _fn(s):
-        vals = s.to_numpy()
-        out = np.empty(len(vals), dtype=object)
-        out[:] = None
-        idx = [i for i, v in enumerate(vals) if v is not None]
-        if idx:
-            m = np.stack([np.asarray(vals[i], dtype=np.float64) for i in idx])
-            bits = (((m @ pt) > 0) * weights).sum(axis=1)
-            for k, i in enumerate(idx):
-                out[i] = int(bits[k])
-        return pd.Series(out)
 
-    _fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(_fn, "long")(F.col(vec_col))
+def sign_sketch(vec_col: str, planes: np.ndarray):
+    """Sign sketch of ``vec_col`` against ``planes``: the bit-exact
+    ``sketch_expr`` while planes × dim fits ``CATALYST_HOF_BUDGET``, the
+    Arrow ``sketch_np`` beyond it."""
+    if planes.size <= CATALYST_HOF_BUDGET:
+        return sketch_expr(vec_col, planes)
+    return sketch_np(vec_col, planes)
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.3,
                              vec_col: str = "embedding", id_col: str = "vec_id",
                              n_planes: int = 64, n_bands: int = 8,
-                             seed: int = 42, dim: int | None = None,
-                             sketch_impl: str = "auto") -> DataFrame:
+                             seed: int = 42, dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine >= threshold) —
     the 100 TB default: sketch-bucketed, never an all-pairs join.
 
-    sign sketch (one-pass ``sketch_expr``) → band explode (n_bands bit
+    sign sketch (``sign_sketch``) → band explode (n_bands bit
     bands, same pigeonhole shape as ``simhash_near_pairs``) → id-only
     bucket join → exact f64 cosine rerank on the candidate pairs only.
     Only (band, bucket, id) rows shuffle for candidate generation; vectors
@@ -157,17 +181,8 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.3,
     width = n_planes // n_bands
     mask = (1 << width) - 1
 
-    # sketch_impl: "catalyst" = bit-exact sequential sums (REQUIRED by any
-    # SQL-oracle-checked call site — pass it explicitly there, never rely
-    # on the size heuristic); "numpy" = Arrow matmul (fast for wide
-    # sketches; pairwise summation, not bit-guaranteed at sign
-    # boundaries); "auto" picks by n_planes*dim (interpreted HOF cost
-    # grows with it, the matmul doesn't).
-    if sketch_impl == "auto":
-        sketch_impl = "catalyst" if n_planes * dim <= 1024 else "numpy"
-    sk = (sketch_expr(vec_col, planes) if sketch_impl == "catalyst"
-          else sketch_np(vec_col, planes))
-    base = df.select(F.col(id_col), sk.alias("sketch"))
+    base = df.select(F.col(id_col),
+                     sign_sketch(vec_col, planes).alias("sketch"))
     bands = [
         F.shiftright(F.col("sketch"), i * width).bitwiseAND(F.lit(mask)).alias("bv")
         for i in range(n_bands)]
@@ -279,23 +294,17 @@ def ivf_list_np(vec_col, centroids: np.ndarray):
     form at exact dot ties (measure-zero on real embeddings), so
     oracle-checked builds keep ``ivf_list_expr`` — equivalence on the
     driver-gate data is pytest-pinned."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    return _matdots_np(vec_col, centroids,
+                       lambda dots: dots.argmax(axis=1), "int")
 
-    ct = centroids.T.copy()
 
-    def _fn(s):
-        vals = s.to_numpy()
-        out = np.full(len(vals), None, dtype=object)
-        idx = [i for i, v in enumerate(vals) if v is not None]
-        if idx:
-            m = np.stack([np.asarray(vals[i], dtype=np.float64)
-                          for i in idx])
-            for i, lst in zip(idx, (m @ ct).argmax(axis=1)):
-                out[i] = int(lst)
-        return pd.Series(out)
-
-    return pandas_udf(_fn, "int")(vec_col)
+def ivf_assign(vec_col: str, centroids: np.ndarray):
+    """Coarse-list id of ``vec_col``: the bit-exact ``ivf_list_expr``
+    while lists × dim fits ``CATALYST_HOF_BUDGET``, the Arrow
+    ``ivf_list_np`` beyond it."""
+    if centroids.size <= CATALYST_HOF_BUDGET:
+        return ivf_list_expr(vec_col, centroids)
+    return ivf_list_np(vec_col, centroids)
 
 
 def ivf_cosine_topk(df: DataFrame, query_vec: list[float], k: int = 20,
@@ -307,9 +316,8 @@ def ivf_cosine_topk(df: DataFrame, query_vec: list[float], k: int = 20,
     centroid (argmax dot, one-pass), probe only the query's ``n_probe``
     closest lists, exact-cosine rerank inside.
 
-    At 100 TB the assignment is written once as a partition column
-    (``df.withColumn("ivf_list", ivf_list_expr(...)).write.partitionBy(
-    "ivf_list")``) so probing becomes PartitionFilters-level pruning —
+    At 100 TB ``ivf_write_index`` writes the assignment once as a
+    partition column, so probing becomes PartitionFilters-level pruning —
     the scan reads n_probe/n_lists of the data.  Here the filter plays
     that role on the fly."""
     if centroids is None:
@@ -338,7 +346,7 @@ def _probe_lists(centroids: np.ndarray, query_vec, n_probe: int) -> list[int]:
 def ivf_write_index(df: DataFrame, path: str, n_lists: int = 16,
                     vec_col: str = "embedding", id_col: str = "vec_id",
                     centroids: np.ndarray | None = None,
-                    seed: int = 42, impl: str = "auto") -> np.ndarray:
+                    seed: int = 42) -> np.ndarray:
     """Materialize the IVF layout: one-pass coarse-list assignment, then
     ``partitionBy("ivf_list")`` parquet — the 100 TB shape where probing
     is PartitionFilters-level pruning (the scan touches n_probe/n_lists
@@ -347,25 +355,15 @@ def ivf_write_index(df: DataFrame, path: str, n_lists: int = 16,
     (underscore-prefixed → invisible to parquet readers), so any reader
     probes the exact quantizer the index was built with.  Null vectors
     are excluded (they can't be probed).  Returns the centroids.
-
-    ``impl``: "catalyst" = bit-exact sequential dot sums (what the
-    pinned-centroid oracle replicates), "numpy" = Arrow matmul kernel
-    (the 100 TB build path — interpreted HOFs are the round-3 GC wall),
-    "auto" = catalyst while the quantizer fits the interpreted-HOF
-    budget (n_lists * dim <= 1024), numpy beyond."""
+    Assignment goes through ``ivf_assign``."""
     import json
     import os
     if centroids is None:
         centroids = train_ivf_centroids(df, n_lists, vec_col, id_col,
                                         seed=seed)
-    if impl == "auto":
-        impl = ("catalyst"
-                if centroids.shape[0] * centroids.shape[1] <= 1024
-                else "numpy")
-    lists = (ivf_list_expr(vec_col, centroids) if impl == "catalyst"
-             else ivf_list_np(F.col(vec_col), centroids))
     out = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col), lists.alias("ivf_list"))
+        F.col(id_col), F.col(vec_col),
+        ivf_assign(vec_col, centroids).alias("ivf_list"))
     out.write.mode("overwrite").partitionBy("ivf_list").parquet(path)
     with open(os.path.join(path, "_ivf_centroids.json"), "w") as fh:
         json.dump([[float(x) for x in row] for row in centroids], fh)
@@ -374,8 +372,7 @@ def ivf_write_index(df: DataFrame, path: str, n_lists: int = 16,
 
 def ivf_append_to_index(df: DataFrame, path: str,
                         vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        impl: str = "auto") -> None:
+                        id_col: str = "vec_id") -> None:
     """Incremental index maintenance: assign NEW vectors with the
     index's OWN quantizer (sidecar centroids — never retrain, or old
     and new rows would disagree on list boundaries) and append their
@@ -384,14 +381,9 @@ def ivf_append_to_index(df: DataFrame, path: str,
     rebuild only when the quantizer drifts from the data distribution
     (monitor per-list counts)."""
     centroids = ivf_read_centroids(path)
-    if impl == "auto":
-        impl = ("catalyst"
-                if centroids.shape[0] * centroids.shape[1] <= 1024
-                else "numpy")
-    lists = (ivf_list_expr(vec_col, centroids) if impl == "catalyst"
-             else ivf_list_np(F.col(vec_col), centroids))
     out = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), F.col(vec_col), lists.alias("ivf_list"))
+        F.col(id_col), F.col(vec_col),
+        ivf_assign(vec_col, centroids).alias("ivf_list"))
     out.write.mode("append").partitionBy("ivf_list").parquet(path)
 
 
@@ -650,8 +642,8 @@ def semantic_dedup(df: DataFrame, n_clusters: int = 16,
     if centroids is None:
         centroids = train_ivf_centroids(df, n_clusters, vec_col, id_col,
                                         sample=sample, seed=seed)
-    # assignment via the numpy matmul kernel (the ivf_write_index
-    # precedent: argmax-dot first-max tie rule identical to
+    # assignment via the numpy matmul kernel at every width (ivf_assign's
+    # wide-quantizer spelling: argmax-dot first-max tie rule identical to
     # ivf_list_expr) — the Catalyst matdots aggregate runs interpreted
     # and would dominate the wall at corpus scale
     base = df.select(

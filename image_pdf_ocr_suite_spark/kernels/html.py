@@ -4,8 +4,8 @@ North-rule addition absent from the reference (SURVEY §2.6): main-content
 extraction for Common-Crawl-style HTML payloads, in the spirit of the
 published text-density / link-density block classifiers (Kohlschütter et
 al., "Boilerplate Detection using Shallow Text Features", WSDM 2010; Sun et
-al. text-density).  Pure stdlib ``html.parser`` — no external deps — run as
-an Arrow-batched ``mapInPandas`` kernel.
+al. text-density).  Pure stdlib ``html.parser`` — no external deps — run
+inside the unified extract kernel (kernels/ocr.py) and the crawl ingest.
 
 Heuristic: segment the DOM into blocks at block-level elements; per block
 accumulate (text_len, link_text_len, tag_count); keep blocks with
@@ -223,32 +223,6 @@ def _classify_blocks(parser: _DensityParser) -> str:
             continue
         kept.append(text)
     return "\n".join(kept)
-
-
-HTML_SCHEMA = "url string, main_text string, n_blocks int"
-
-
-def html_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        from image_pdf_ocr_suite_spark.kernels.charset import decode_bytes
-
-        texts, counts = [], []
-        for raw in pdf["page_payload"]:
-            html = decode_bytes(raw)[0]
-            main = extract_main_text(html)
-            texts.append(main)
-            counts.append(main.count("\n") + 1 if main else 0)
-        yield pd.DataFrame({"url": pdf["url"].to_numpy(),
-                            "main_text": texts, "n_blocks": counts})
-
-
-def strip_html(page_df):
-    """html-kind page rows -> (url, main_text, n_blocks).  Standalone
-    utility; the main pipeline runs extract_main_text inside the unified
-    extract kernel (kernels/ocr.py) so one Python stage serves all kinds."""
-    return page_df.select("url", "page_payload").mapInPandas(html_kernel, schema=HTML_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -569,15 +569,25 @@ def test_nfc_normalize_combining_chars(spark):
 
 
 def test_sketch_impl_paths_agree(spark, neardup_emb):
-    """Catalyst and numpy sketch paths produce the same near-dup pairs on
-    real data (bit divergence needs a dot product at an exact sign
-    boundary — astronomically unlikely; this pins it for the fixtures)."""
-    kwargs = dict(threshold=0.9, dim=32, n_planes=64, n_bands=8)
-    cat = {(r["id_a"], r["id_b"]) for r in similarity.embedding_near_dup_pairs(
-        neardup_emb, sketch_impl="catalyst", **kwargs).collect()}
-    npy = {(r["id_a"], r["id_b"]) for r in similarity.embedding_near_dup_pairs(
-        neardup_emb, sketch_impl="numpy", **kwargs).collect()}
-    assert cat == npy and len(cat) >= 10
+    """The Catalyst and numpy sign-sketch spellings agree bit for bit on
+    real data (a divergence needs a dot product at an exact sign
+    boundary — astronomically unlikely; this pins it for the fixtures),
+    and ``sign_sketch`` takes numpy past the Catalyst budget: 64 planes
+    × dim 32 = 2048 coefficients."""
+    planes = similarity.hyperplanes(32, 64, seed=42)
+    assert planes.size > similarity.CATALYST_HOF_BUDGET
+    both = neardup_emb.select(
+        "vec_id",
+        similarity.sketch_expr("embedding", planes).alias("cat"),
+        similarity.sign_sketch("embedding", planes).alias("npy"))
+    assert "ArrowEvalPython" in \
+        both._jdf.queryExecution().executedPlan().toString()
+    rows = both.collect()
+    assert len(rows) == 80
+    assert [r["vec_id"] for r in rows if r["cat"] != r["npy"]] == []
+    pairs = similarity.embedding_near_dup_pairs(
+        neardup_emb, threshold=0.9, dim=32, n_planes=64, n_bands=8)
+    assert pairs.count() >= 10
 
 
 def test_ivf_train_guards_empty_and_null(spark):
@@ -877,16 +887,18 @@ def test_adversarial_html_cases_local_and_spark(spark):
     """r4 VERDICT item 7: adversarial HTML structures (link-heavy tables,
     comment bombs, inline <script>/ld+json, nested boilerplate, unclosed
     tags, entity refs) against GROUND-TRUTH expectations — both the bare
-    classifier and the Spark kernel path (strip_html) must agree.  The
-    driver corpus itself stays frozen (byte-identity invariant)."""
+    classifier and the extraction path users run (``extract_pages`` over
+    ``(url, html binary)`` rows) must agree.  The driver corpus itself
+    stays frozen (byte-identity invariant)."""
+    from image_pdf_ocr_suite_spark import extract_pages
     from image_pdf_ocr_suite_spark.fixtures import adversarial_html_cases
-    from image_pdf_ocr_suite_spark.kernels.html import (
-        extract_main_text, strip_html)
+    from image_pdf_ocr_suite_spark.kernels.html import extract_main_text
     cases = adversarial_html_cases()
     for name, html, expected in cases:
         assert extract_main_text(html) == expected, name
     df = spark.createDataFrame(
         [(name, bytearray(html.encode("utf-8"))) for name, html, _ in cases],
-        "url string, page_payload binary")
-    got = {r["url"]: r["main_text"] for r in strip_html(df).collect()}
-    assert got == {name: exp for name, _, exp in cases}
+        "url string, html binary")
+    got = {r["url"]: (r["kind"], r["extracted_text"])
+           for r in extract_pages(df).text.collect()}
+    assert got == {name: ("html", exp) for name, _, exp in cases}

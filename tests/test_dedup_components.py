@@ -158,18 +158,34 @@ def test_dedup_against_index_id_collision_verifies_correct_text(spark, tmp_path)
     assert all(isinstance(n, int) and isinstance(i, int) for n, i in ver)
 
 
+def _shuffled_powerlaw_edges(spark, n_nodes: int):
+    """(id_a, id_b): a random recursive tree (node i attaches to
+    xxhash(i) % i, so hubs collect many children) plus one extra random
+    edge per node, with labels hashed so they carry no topology — where
+    min-label pointer jumping stalls.  A label collision only merges two
+    components, which makes the instance harder, never easier."""
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+    base = spark.range(1, n_nodes).select(
+        i.alias("i"), F.pmod(F.xxhash64(i, F.lit(1)), i).alias("p"),
+        F.pmod(F.xxhash64(i, F.lit(2)), i).alias("q"))
+    edges = (base.select("i", F.col("p").alias("j"))
+             .union(base.select("i", F.col("q").alias("j")))
+             .where(F.col("i") != F.col("j")))
+    return edges.select(F.xxhash64("i", F.lit(7)).alias("id_a"),
+                        F.xxhash64("j", F.lit(7)).alias("id_b"))
+
+
 def test_star_powerlaw_rounds_and_edge_collapse(spark):
     """r4 VERDICT item 5: on a label-shuffled random-attachment graph
-    (the BENCH/run_cc_scale.py generator at small scale) the star rounds
-    stay <= 8 and the edge set collapses monotonically after the warmup
+    (``_shuffled_powerlaw_edges`` at 20k nodes) the star rounds stay
+    <= 8 and the edge set collapses monotonically after the warmup
     rounds — the property that survives 100 TB graphs.  Full-scale
     evidence: 10M edges -> 6 rounds, BENCH/BASELINE.md."""
-    import sys
-
     from pyspark.sql import functions as F
-    sys.path.insert(0, "/root/repo/BENCH")
-    from run_cc_scale import shuffled_powerlaw_edges
-    edges = shuffled_powerlaw_edges(spark, 20_000).localCheckpoint()
+
+    edges = _shuffled_powerlaw_edges(spark, 20_000).localCheckpoint()
     comps = dedup.connected_components_star(edges, max_iters=10)
     assert comps.count() > 0
     assert dedup._last_rounds <= 8, dedup._last_rounds

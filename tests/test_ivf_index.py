@@ -131,10 +131,28 @@ def test_ivf_assignment_arrow_matches_catalyst(spark, emb_df):
         sorted((r["vec_id"], r["l"]) for r in arr)
 
 
-def test_ivf_write_index_numpy_impl(spark, emb_df, tmp_path):
+def test_ivf_write_index_numpy_impl(spark, tmp_path):
+    """Past the Catalyst budget (32 lists × dim 64 = 2048 coefficients)
+    the build assigns with the Arrow spelling, and the ``ivf_list=``
+    layout it writes is the one ``ivf_list_expr`` gives."""
+    rng = np.random.RandomState(5)
+    wide = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(64)])
+         for i in range(300)], "vec_id long, embedding array<double>")
     path = str(tmp_path / "ivf_np")
-    similarity.ivf_write_index(emb_df, path, n_lists=N_LISTS, impl="numpy")
-    qvec = [float(x) for x in emb_df.where("vec_id = 0").head()["embedding"]]
+    cents = similarity.ivf_write_index(wide, path, n_lists=32)
+    assert cents.size > similarity.CATALYST_HOF_BUDGET
+    assigned = wide.select(similarity.ivf_assign("embedding", cents))
+    assert "ArrowEvalPython" in \
+        assigned._jdf.queryExecution().executedPlan().toString()
+    layout = sorted((r["vec_id"], r["ivf_list"]) for r in
+                    spark.read.parquet(path).select("vec_id", "ivf_list")
+                    .collect())
+    expected = sorted((r["vec_id"], r["l"]) for r in wide.select(
+        "vec_id", similarity.ivf_list_expr("embedding", cents).alias("l"))
+        .collect())
+    assert len(layout) == 300 and layout == expected
+    qvec = [float(x) for x in wide.where("vec_id = 0").head()["embedding"]]
     served = similarity.ivf_topk_from_index(spark, path, qvec, k=10,
                                             n_probe=3).collect()
     assert len(served) == 10 and served[0]["vec_id"] == 0

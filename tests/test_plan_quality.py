@@ -11,14 +11,21 @@
 - worker boot has one seam: only workerboot.py patches ``zipimport``,
   with no daemon module and no sitecustomize;
 - driver threads inherit the caller's local properties (job group,
-  description) and the scheduler stays FIFO: no pool, no allocation file.
+  description) and the scheduler stays FIFO: no pool, no allocation file;
+- the oracle-checked embedding assignments (near-dup sketch, IVF and
+  IVF-PQ builds, cluster-balanced sampling) plan on the bit-exact
+  Catalyst side, the Catalyst-vs-numpy budget is one package constant,
+  and no package function takes an ``impl``-style ``"auto"`` switch;
+- no test reaches into a script directory through ``sys.path``.
 """
 
 import ast
 import os
 import re
+import tempfile
 
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 import __spark_entry__ as entrymod
 from image_pdf_ocr_suite_spark import ExtractConfig, extract_pages, fixtures
@@ -316,3 +323,69 @@ def test_warc_parse_is_map_only(spark):
     plan = _plan(entrymod.q_warc_extract(spark, SF_DIR))
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Exchange") <= 2, plan
+
+
+# queries whose DuckDB oracle replays the sequential-sum Catalyst
+# assignment, with the index cache each build is kept in (None: the
+# assignment is planned inline)
+ORACLE_ASSIGN_QUERIES = {
+    "q_embedding_near_dup": None,
+    "q_cluster_balanced_sample": None,
+    "q_ivf_topk_from_index": "_IVF_INDEX_CACHE",
+    "q_ivf_append_probe": "_IVF_APPEND_CACHE",
+    "q_ivfpq_topk": "_IVFPQ_INDEX_CACHE",
+}
+
+
+@pytest.mark.parametrize("query", sorted(ORACLE_ASSIGN_QUERIES))
+def test_oracle_assignment_stays_catalyst(spark, monkeypatch, tmp_path,
+                                         query):
+    """similarity.ivf_assign/sign_sketch must send every oracle-checked
+    assignment (16 × dim 64) to the bit-exact Catalyst spelling: no
+    Python eval node computes the sketch, cluster or list column.  Index
+    builds are checked on the plans they write."""
+    cache, plans = ORACLE_ASSIGN_QUERIES[query], []
+    if cache is not None:
+        # a fresh build, into a directory pytest cleans up
+        monkeypatch.setattr(entrymod, cache, {})
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        real = DataFrameWriter.parquet
+
+        def spy(self, *args, **kwargs):
+            plans.append(_plan(self._df))
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    df = getattr(entrymod, query)(spark, SF_DIR)
+    if cache is None:
+        assert "EvalPython" not in _plan(df), _plan(df)
+    else:
+        assert plans and all(" AS ivf_list#" in p for p in plans), plans
+        assert not any(re.search(r"pythonUDF\d+#\d+L? AS ivf_list#", p)
+                       for p in plans), plans
+
+
+def test_one_catalyst_budget_and_no_auto_impl_switch():
+    budget_defs, auto_switches = [], []
+    for path in filter(lambda p: p.endswith(".py"), _engine_files()):
+        src = open(path).read()
+        budget_defs += re.findall(r"^CATALYST_HOF_BUDGET\s*=", src, re.M)
+        assert not re.search(r"<=\s*1024\b", src), path
+        for fn in ast.walk(ast.parse(src)):
+            if isinstance(fn, ast.FunctionDef):
+                # positional defaults belong to the trailing parameters
+                pairs = [*zip(fn.args.args[::-1], fn.args.defaults[::-1]),
+                         *zip(fn.args.kwonlyargs, fn.args.kw_defaults)]
+                auto_switches += [
+                    (path, fn.name, a.arg) for a, d in pairs
+                    if a.arg.endswith("impl") and isinstance(d, ast.Constant)
+                    and d.value == "auto"]
+    assert len(budget_defs) == 1 and auto_switches == [], auto_switches
+
+
+def test_no_test_imports_from_a_script_directory():
+    here = os.path.dirname(os.path.abspath(__file__))
+    offenders = [f for f in os.listdir(here) if f.endswith(".py") and re.search(
+        r"sys\.path\.(insert|append)\([^)]*BENCH",
+        open(os.path.join(here, f)).read())]
+    assert offenders == [], offenders
